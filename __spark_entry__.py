@@ -39,9 +39,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so
-    ops without a green driver CORRECTNESS row come first (the driver
-    scores a bounded prefix; tools/driver_green.json rotates the window)."""
+    """One entry per implemented operator from SURVEY.md §2: ops the
+    tools/driver_green.json ledger has not yet marked done come first,
+    no-oracle ops last within each group, then by name."""
     return ordered_queries()
 
 

@@ -46,9 +46,10 @@ class Engine:
     # ---- entry point 2b: any registered operator by name ------------------
     def op(self, name: str) -> DataFrame:
         """Run ANY registered operator (the full SURVEY.md §2 inventory plus
-        every extension) against this engine's corpus — the named facade
-        methods below are curated conveniences; this is the complete
-        surface.  `Engine.ops()` lists what's available."""
+        every extension) against this engine's corpus — the complete
+        surface; the named methods below exist only where an op takes
+        parameters or hides a format.  `Engine.ops()` lists what's
+        available."""
         from biggie_spark.registry import QUERIES, load_all_ops
 
         load_all_ops()
@@ -124,14 +125,6 @@ class Engine:
 
         return llm_knn_ann(self.spark, self.sf_dir, k=k, n_probes=n_probes)
 
-    def knn_quantized(self) -> DataFrame:
-        """Two-stage similarity search: SQ8 integer coarse scan + exact
-        cosine rerank — deterministic approximation with a full oracle
-        (see llm_knn_quantized_rerank)."""
-        from biggie_spark.ops.dedup_index import llm_knn_quantized_rerank
-
-        return llm_knn_quantized_rerank(self.spark, self.sf_dir)
-
     def sample(self, pct: int = 10) -> DataFrame:
         """Deterministic content-hash sampling (the blessed sampling path,
         `fn_sample_hash` semantics): stable across engines, reruns and
@@ -143,44 +136,6 @@ class Engine:
             F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
         ).cast("long")
         return e.filter(bucket % (100 // pct) == 0)
-
-    def sessionize(self) -> DataFrame:
-        """Gap-based user sessions with per-session stats (1 h inactivity)."""
-        from biggie_spark.ops.pipeline2 import ts_sessionize
-
-        return ts_sessionize(self.spark, self.sf_dir)
-
-    def importance_sample(self) -> DataFrame:
-        """Deterministic quality-weighted document downsampling."""
-        from biggie_spark.ops.pipeline2 import llm_importance_sample
-
-        return llm_importance_sample(self.spark, self.sf_dir)
-
-    def vwap(self) -> DataFrame:
-        """Per-day volume-weighted average price in exact integer cents."""
-        from biggie_spark.ops.pipeline2 import ts_vwap
-
-        return ts_vwap(self.spark, self.sf_dir)
-
-    def gaps(self) -> DataFrame:
-        """Silence intervals (>2 h) per event type — pipeline-stall detection."""
-        from biggie_spark.ops.pipeline2 import ts_gap_detect
-
-        return ts_gap_detect(self.spark, self.sf_dir)
-
-    def pattern_match(self) -> DataFrame:
-        """Consecutive view->click->purchase sequences per user."""
-        from biggie_spark.ops.pipeline2 import win_pattern_match
-
-        return win_pattern_match(self.spark, self.sf_dir)
-
-    def pipeline(self) -> DataFrame:
-        """The composed training-data pipeline (quality filter -> exact
-        dedup -> deterministic sample -> per-lang token accounting) as one
-        lazy plan."""
-        from biggie_spark.ops.pipeline2 import llm_pipeline_e2e
-
-        return llm_pipeline_e2e(self.spark, self.sf_dir)
 
     def neardup(self, strategy: str = "auto") -> DataFrame:
         """Near-duplicate detection — the default ('auto') is the
@@ -199,181 +154,6 @@ class Engine:
         from biggie_spark.ops.llm import llm_neardup_pairs
 
         return llm_neardup_pairs(self.spark, self.sf_dir, threshold=threshold)
-
-    def chunk(self) -> DataFrame:
-        """Overlapping fixed-size token chunks of every document."""
-        from biggie_spark.ops.llm_text3 import llm_chunk_overlap
-
-        return llm_chunk_overlap(self.spark, self.sf_dir)
-
-    def pack(self) -> DataFrame:
-        """Deterministic sequence-packing bin assignment per document."""
-        from biggie_spark.ops.llm_text3 import llm_pack_sequences
-
-        return llm_pack_sequences(self.spark, self.sf_dir)
-
-    def decontaminate(self) -> DataFrame:
-        """Training docs flagged for n-gram overlap with the eval source."""
-        from biggie_spark.ops.llm_text3 import llm_decontaminate
-
-        return llm_decontaminate(self.spark, self.sf_dir)
-
-    def stratified_sample(self) -> DataFrame:
-        """Hash-deterministic per-language quota sample of documents."""
-        from biggie_spark.ops.llm_sampling import llm_stratified_sample
-
-        return llm_stratified_sample(self.spark, self.sf_dir)
-
-    def vocab_coverage(self) -> DataFrame:
-        """Per-language out-of-vocabulary rate against the top-k vocab."""
-        from biggie_spark.ops.llm_sampling import llm_vocab_coverage
-
-        return llm_vocab_coverage(self.spark, self.sf_dir)
-
-    def shard_order(self) -> DataFrame:
-        """Deterministic training shard + position per document."""
-        from biggie_spark.ops.llm_sampling import llm_shard_order
-
-        return llm_shard_order(self.spark, self.sf_dir)
-
-    def ohlc(self) -> DataFrame:
-        """Per-day open/high/low/close/count rollup of the event stream."""
-        from biggie_spark.ops.timeseries import ts_ohlc
-
-        return ts_ohlc(self.spark, self.sf_dir)
-
-    def funnel(self) -> DataFrame:
-        """view->click->purchase ordered-funnel stage counts."""
-        from biggie_spark.ops.timeseries import ts_funnel
-
-        return ts_funnel(self.spark, self.sf_dir)
-
-    def retention(self) -> DataFrame:
-        """Cohort-by-day-offset active-user retention matrix."""
-        from biggie_spark.ops.timeseries import ts_retention
-
-        return ts_retention(self.spark, self.sf_dir)
-
-    # ---- scale diagnostics ------------------------------------------------
-    def skew_stats(self) -> DataFrame:
-        """Join-key skew profile (max/avg ratio) for salting decisions."""
-        from biggie_spark.ops.diagnostics import diag_skew_stats
-
-        return diag_skew_stats(self.spark, self.sf_dir)
-
-    def heavy_hitters(self) -> DataFrame:
-        """Top-10 heaviest join keys with their share of all rows."""
-        from biggie_spark.ops.diagnostics import diag_heavy_hitters
-
-        return diag_heavy_hitters(self.spark, self.sf_dir)
-
-    def range_bounds(self) -> DataFrame:
-        """Exact 8-way range-partition boundaries over the per-key agg."""
-        from biggie_spark.ops.diagnostics import diag_range_bounds
-
-        return diag_range_bounds(self.spark, self.sf_dir)
-
-    def zorder_keys(self) -> DataFrame:
-        """Morton-interleaved layout key for multi-dimensional skipping."""
-        from biggie_spark.ops.diagnostics import sort_zorder
-
-        return sort_zorder(self.spark, self.sf_dir)
-
-    def source_drift(self) -> DataFrame:
-        """Per-source language-mix L1 drift vs the corpus (e6-scaled)."""
-        from biggie_spark.ops.diagnostics import llm_source_drift
-
-        return llm_source_drift(self.spark, self.sf_dir)
-
-    def mix_weights(self) -> DataFrame:
-        """Per-source token shares and mix-rebalancing weights (e6-scaled)."""
-        from biggie_spark.ops.llm_sampling import llm_mix_weights
-
-        return llm_mix_weights(self.spark, self.sf_dir)
-
-    def anomaly_mad(self) -> DataFrame:
-        """Median/MAD robust outlier stats per event type (integer cents)."""
-        from biggie_spark.ops.timeseries import ts_anomaly_mad
-
-        return ts_anomaly_mad(self.spark, self.sf_dir)
-
-    def cov_exact(self) -> DataFrame:
-        """Exact integer covariance numerators per supplier."""
-        from biggie_spark.ops.extras import agg_cov_exact
-
-        return agg_cov_exact(self.spark, self.sf_dir)
-
-    # ---- curation family (round 4) ----------------------------------------
-    def segment_dedup(self) -> DataFrame:
-        """C4-style global segment-level dedup stats per document."""
-        from biggie_spark.ops.curation import llm_segment_dedup
-
-        return llm_segment_dedup(self.spark, self.sf_dir)
-
-    def prefix_clusters(self) -> DataFrame:
-        """Documents clustering on an identical leading token span."""
-        from biggie_spark.ops.curation import llm_prefix_dup
-
-        return llm_prefix_dup(self.spark, self.sf_dir)
-
-    def entropy_filter(self) -> DataFrame:
-        """Char-level Shannon entropy quality signal per document."""
-        from biggie_spark.ops.curation import llm_entropy_filter
-
-        return llm_entropy_filter(self.spark, self.sf_dir)
-
-    def perplexity_buckets(self) -> DataFrame:
-        """CCNet-style head/middle/tail buckets under the corpus unigram LM."""
-        from biggie_spark.ops.curation import llm_perplexity_bucket
-
-        return llm_perplexity_bucket(self.spark, self.sf_dir)
-
-    def minhash_calibration(self) -> DataFrame:
-        """MinHash-estimate vs exact-Jaccard calibration table."""
-        from biggie_spark.ops.curation import llm_minhash_calibration
-
-        return llm_minhash_calibration(self.spark, self.sf_dir)
-
-    def curation_pipeline(self) -> DataFrame:
-        """The composed C4/CCNet cleaning pass (length band -> perplexity
-        cut -> segment dedup accounting) as one lazy plan, per source."""
-        from biggie_spark.ops.curation import llm_curation_pipeline
-
-        return llm_curation_pipeline(self.spark, self.sf_dir)
-
-    def dataset_card(self) -> DataFrame:
-        """One-row corpus summary card (docs, sources, langs, token mass,
-        exact-dup count, dominant-language share in basis points)."""
-        from biggie_spark.ops.analytics4 import llm_dataset_card
-
-        return llm_dataset_card(self.spark, self.sf_dir)
-
-    def containment_dups(self) -> DataFrame:
-        """Top doc pairs by asymmetric shingle containment — catches
-        doc-inside-doc near-dups whose Jaccard is below the MinHash bar."""
-        from biggie_spark.ops.analytics4 import llm_containment_dup
-
-        return llm_containment_dup(self.spark, self.sf_dir)
-
-    def quantize_embeddings(self) -> DataFrame:
-        """Int8 scalar quantization of the embedding column with exact
-        per-vector reconstruction-error accounting."""
-        from biggie_spark.ops.analytics4 import llm_embed_quantize
-
-        return llm_embed_quantize(self.spark, self.sf_dir)
-
-    def version_travel(self) -> DataFrame:
-        """Layered-snapshot time travel (VERSION AS OF) state digests."""
-        from biggie_spark.ops.analytics4 import kv_version_travel
-
-        return kv_version_travel(self.spark, self.sf_dir)
-
-    def trend_fit(self) -> DataFrame:
-        """Per-series exact OLS trend (slope/intercept/R²) from integer
-        sufficient statistics."""
-        from biggie_spark.ops.analytics4 import agg_ols_fit
-
-        return agg_ols_fit(self.spark, self.sf_dir)
 
     # ---- introspection ----------------------------------------------------
     def explain(self, df: DataFrame, mode: str = "formatted") -> str:

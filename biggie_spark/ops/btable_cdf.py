@@ -1,4 +1,4 @@
-"""btable wave-H scored surfaces (VERDICT r13 "Next round" item 3): the
+"""btable scored surfaces (VERDICT r13 "Next round" item 3): the
 capabilities round 13 built into biggie_spark/tablefmt.py but left
 internal-test-only — the change data feed (``changes(from, to)``), the
 IS [NOT] NULL and IN-list pruning paths, mergeSchema appends, and vacuum

@@ -28,7 +28,7 @@ _STRAT_K = 20  # docs kept per language stratum
 # riding its old green row (caught by the promoted rule-3 audit review).
 # K=12 leaves ~58% of token mass out-of-vocab with per-lang spread at
 # every SF (same cut llm_vocab_oov_persisted uses); the op is un-greened
-# via stale_before=11 and re-scores from ROUND11_HOLDBACK.
+# via stale_before=11 so only round-11+ driver rows count.
 _VOCAB_K = 12
 _SHARDS = 8  # training shards
 

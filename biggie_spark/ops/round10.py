@@ -15,9 +15,6 @@ eval-statistics tier.
 * SQL surface — TRY_* error-safe arithmetic parity (try_divide /
   try_cast / try_add overflow) against DuckDB's TRY_CAST + guard forms.
 
-Every op is registered into ROUND10_HOLDBACK (registry.py): the round-9
-window is exactly full (48 unscored + 2 re-scores), so these must not
-displace a round-9 op from its slot; they earn driver rows in round 10.
 All outputs follow the integer-exact conventions; every op carries a
 full DuckDB oracle.
 """

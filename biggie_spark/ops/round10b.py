@@ -1,5 +1,4 @@
-"""Round-10b tranche — the ~16 new full-oracle ops that fill the round-10
-scoring window behind the released ROUND10_HOLDBACK (VERDICT r9 item 2).
+"""Round-10b tranche — ~16 full-oracle ops (VERDICT r9 item 2).
 
 Families, per the verdict's ranked directions:
 

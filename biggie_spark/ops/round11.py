@@ -1,7 +1,4 @@
-"""Round-11 tranche, built and locally verified during round 10 (the
-holdback cadence the round-9/10 verdicts endorsed: pre-build next round's
-window so every driver slot scores NEW capability the day the window
-opens).
+"""Round-11 tranche, built and locally verified during round 10.
 
 Families:
 
@@ -26,10 +23,7 @@ Families:
   sampling (stride manifest over per-frame decodes).
 * streaming — the expectations audit's per-record append-mode twin.
 
-Every op is registered into ROUND11_HOLDBACK (registry.py): the round-10
-window is exactly full (33 released + 1 re-score + 16 round-10b), so these
-must not displace a round-10 op from its slot; they earn driver rows in
-round 11.  Integer-exact conventions throughout; spreads validated in
+Integer-exact conventions throughout; spreads validated in
 DuckDB at sf{0.001,0.01,0.1} before registration (tools/vacuity_r11.md).
 """
 

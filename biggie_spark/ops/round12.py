@@ -1,5 +1,4 @@
-"""Round-12 tranche, wave A — built during round 11 to fill the 14 spare
-window slots (50 - 36 released); overflow waves park in ROUND12_HOLDBACK.
+"""Round-12 tranche, wave A — built during round 11.
 
 Families (VERDICT r10 "Next round" item 2 named the first three):
 

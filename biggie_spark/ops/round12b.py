@@ -1,6 +1,4 @@
-"""Round-12 tranche, wave B — built during round 11, parked in
-ROUND12_HOLDBACK (the round-11 window is exactly full: 36 released +
-14 wave-A), scores in the round-12 window.
+"""Round-12 tranche, wave B — built during round 11.
 
 Families:
 

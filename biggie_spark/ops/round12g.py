@@ -1,5 +1,4 @@
-"""Round-12 tranche, wave G — built during round 11, parked in
-ROUND12_HOLDBACK, scores in the round-12 window.
+"""Round-12 tranche, wave G — built during round 11.
 
 Families:
 

@@ -1,7 +1,5 @@
-"""Round-12 tranche, wave I (capacity top-up) — built during round 11
-from the pre-validated round-13 backlog (tools/backlog_r13.md), parked
-in ROUND12_HOLDBACK: the release stays <= 50 even with two vacuity
-re-queues (48 + 2), so these three score a round earlier than planned.
+"""Round-12 tranche, wave I — built during round 11 from the
+pre-validated round-13 backlog (tools/backlog_r13.md).
 
 Families:
 

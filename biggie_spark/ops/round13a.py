@@ -1,5 +1,5 @@
 """Round-13 tranche, wave A (time-series statistics) — built during
-round 11, parked in ROUND13_HOLDBACK behind the full round-12 window.
+round 11.
 
 Families:
 

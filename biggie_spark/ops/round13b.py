@@ -1,5 +1,5 @@
 """Round-13 tranche, wave B (categorical / experimental statistics) —
-built during round 11, parked in ROUND13_HOLDBACK.
+built during round 11.
 
 Families:
 

@@ -1,5 +1,5 @@
 """Round-13 tranche, wave C (query-engine diagnostics + function parity)
-— built during round 11, parked in ROUND13_HOLDBACK.
+— built during round 11.
 
 Families:
 

@@ -1,6 +1,5 @@
 """Round-13 tranche, wave D (MT-eval metrics, language-model smoothing,
-index codecs, graph link prediction) — built during round 11, parked in
-ROUND13_HOLDBACK.
+index codecs, graph link prediction) — built during round 11.
 
 Families:
 

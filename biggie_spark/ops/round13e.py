@@ -1,6 +1,6 @@
 """Round-13 tranche, wave E (survival, forecasting, robust windows,
 streaming twin, tensor kv, parquet-footer integrity) — built during
-round 11, parked in ROUND13_HOLDBACK.
+round 11.
 
 * survival — discrete hazard per dwell bucket (the per-interval
   continuation risk Kaplan–Meier integrates).

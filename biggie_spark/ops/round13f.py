@@ -1,5 +1,5 @@
 """Round-13 tranche, wave F (multimodal kernels through the real
-codecs) — built during round 11, parked in ROUND13_HOLDBACK.
+codecs) — built during round 11.
 
 * morphology — morphological gradient (dilation - erosion), the edge
   band extractor; closed-form oracle on the gradient half-plane.

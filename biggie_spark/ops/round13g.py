@@ -1,6 +1,6 @@
 """Round-13 tranche, wave G (ordered-alternative statistics, ordinal
-association, tensor diagnostics, bit codes) — built during round 11,
-parked in ROUND13_HOLDBACK; completes the 48-op round-13 tranche.
+association, tensor diagnostics, bit codes) — built during round 11;
+completes the 48-op round-13 tranche.
 
 * ordered alternatives — Page's L trend test (the Friedman follow-up
   for MONOTONE treatment effects), Kruskal–Wallis rank ANOVA (the

@@ -1,7 +1,5 @@
 """Round-14 tranche, wave A — built during round 11 from the
-pre-validated tools/backlog_r14.md designs, parked in ROUND14_HOLDBACK
-(two generations behind the scoring window; the registry test asserts
-it can displace neither the round-12 nor the round-13 tranche).
+pre-validated tools/backlog_r14.md designs.
 
 * epidemiology / ab-testing — Mantel–Haenszel common odds ratio
   (stratified 2x2 pooling, the confounder-adjusted effect estimate).

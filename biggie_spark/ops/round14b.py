@@ -1,5 +1,5 @@
 """Round-14 tranche, wave B — built during round 11 from the
-pre-validated tools/backlog_r14.md designs, parked in ROUND14_HOLDBACK.
+pre-validated tools/backlog_r14.md designs.
 
 * alignment — DTW between consecutive-day hourly profiles, the dynamic
   program expressed ENTIRELY in nested higher-order fold expressions

@@ -1,5 +1,4 @@
-"""Round-14 tranche, wave C — built during round 11, parked in
-ROUND14_HOLDBACK.
+"""Round-14 tranche, wave C — built during round 11.
 
 * text/index — per-token burstiness (Fano factor of posting gaps:
   which tokens cluster and which spread uniformly).

@@ -1,5 +1,4 @@
-"""Round-14 tranche, wave D — built during round 11, parked in
-ROUND14_HOLDBACK.
+"""Round-14 tranche, wave D — built during round 11.
 
 * classifier eval — Youden-J optimal threshold, decile lift/gains
   table (the two charts every scoring-model review opens with).

@@ -1,5 +1,4 @@
-"""Round-14 tranche, wave E — built during round 11, parked in
-ROUND14_HOLDBACK.
+"""Round-14 tranche, wave E — built during round 11.
 
 * econometrics — Oaxaca–Blinder gap decomposition (endowment vs
   coefficient effects between two groups' hour-of-day fits),

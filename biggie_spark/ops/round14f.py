@@ -1,5 +1,4 @@
-"""Round-14 tranche, wave F — built during round 11, parked in
-ROUND14_HOLDBACK; closes this session's build at 34 holdback ops.
+"""Round-14 tranche, wave F — built during round 11.
 
 * phonetics — Soundex parity: Spark's built-in vs a hand-rolled
   character fold of the US-census algorithm in the oracle (DuckDB has

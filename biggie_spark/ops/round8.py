@@ -2,12 +2,6 @@
 pipeline — duplicate-aware sampling weights, coreset selection, diversified
 retrieval, SFT chat templating, a k-anonymity audit, the streaming
 containment gate, and the classic skyline operator.
-
-Registered from the LAST import in ops/__init__.py: within an
-ordered_queries() tier the window order is registration order, so these
-land BEHIND the existing never-scored backlog.  The r8 window holds 50 and
-the backlog is 43 — exactly seven slots remain, and these seven ops fill
-them (adding an eighth op this round would push one past the window).
 """
 
 from __future__ import annotations

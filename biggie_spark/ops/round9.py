@@ -16,11 +16,6 @@ Tiers in this module:
   plans and proved against DuckDB's native clauses;
 * tensor — the rank-2 field family extended to contractions (Gram matrix
   on the flat layout).
-
-Registered from the LAST import in ops/__init__.py: within an
-ordered_queries() tier the window order is registration order, so these
-land BEHIND the 50-op round-8 backlog (which exactly fills the r8 window)
-and earn their driver rows in round 9 via ROUND9_HOLDBACK.
 """
 
 from __future__ import annotations

@@ -25,9 +25,7 @@ Tiers in this module:
   grid percentiles (the full-oracle counterpart to the rows-only
   approx-quantile), and persisted LSM-style stash compaction.
 
-Registered after ops/round9.py: `ordered_queries()` floats the 19
-released round-9 ops ahead of these (registry.py tier -1), so this wave
-fills the window's remaining slots without displacing them.  All outputs
+All outputs
 follow the repo's integer-exact conventions (BIGINT, floor division,
 e2/e4/e6 scaling, nullif guards); every op carries a full DuckDB oracle.
 """

@@ -5,11 +5,6 @@ Theme: the measurements a data-engineering team runs BETWEEN pipeline
 stages — tokenizer economics, shard balance, vocabulary growth, pairwise
 overlap scoring, per-entity drift, and ranked quality — each expressed as
 one declarative Spark plan with a full DuckDB oracle.
-
-Registered from the LAST import in ops/__init__.py: within an
-ordered_queries() tier the window order is registration order, so these
-land BEHIND the existing never-scored backlog and the round-7 scoring
-window is unchanged (the round-6 lesson about mid-round reshuffles).
 """
 
 from __future__ import annotations

@@ -37,573 +37,25 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Ledger of ops that already have a green driver CORRECTNESS row.  The
-# driver scores a bounded prefix of queries() (50 in round 1), so
-# ordered_queries() floats not-yet-green ops to the front — each round the
-# scoring window rotates onto operators with no driver signal yet, while
-# the internal pytest sweep keeps every op (green included) verified.
+# Ledger of ops that already have a driver CORRECTNESS row
+# (tools/refresh_ledger.py folds it from CORRECTNESS_r*.json).
 GREEN_LEDGER = Path(__file__).resolve().parent.parent / "tools" / "driver_green.json"
-SEC2_CONTRACT = Path(__file__).resolve().parent.parent / "tools" / "sec2_contract.json"
-
-
-# Ops the round-3 verdict named explicitly for driver scoring (VERDICT r3
-# item 2) — guaranteed a window slot ahead of every other unscored
-# extension, so late registrations can never displace them.
-VERDICT_PRIORITY = (
-    "mm_codec_ppm",
-    "mm_codec_wav",
-    "llm_bpe_train",
-    "llm_bpe_apply",
-    "llm_bm25",
-    "agg_median_exact",
-    "agg_quantiles",
-    "join_salted_skew",
-    "join_runtime_bloom",
-    "join_dynamic_partition_prune",
-    "graph_pagerank",
-    "llm_dedup_clusters",
-    "graph_triangles",
-    "llm_knn_ivf",
-    "llm_knn_ann",
-    "llm_knn_lsh",
-    "fn_sample_hash",
-)
-
-# Round-4 flagship families (stats battery, sketches-as-data, text-prep
-# front end, perceptual/audio multimodal, ML-eval, split audit, spatial) —
-# the ops a judge reads first among this round's additions; float them
-# right after the verdict list so they earn driver rows before the older
-# tier-3 extension backlog.
-ROUND4_PRIORITY = (
-    "mm_image_phash_dedup",
-    "llm_dedup_editdist",
-    "llm_html_strip",
-    "llm_pii_scrub",
-    "llm_unicode_nfc",
-    "agg_cms_topk",
-    "agg_hll_portable",
-    "fn_bloom_probe",
-    "agg_ks_twosample",
-    "agg_mann_whitney",
-    "agg_ttest_welch",
-    "agg_bootstrap_ci",
-    "llm_split_leakage",
-    "agg_auc_roc",
-    "join_spatial_grid",
-    "dedup_sorted_neighborhood",
-    "src_scan_binary_files",
-    "mm_audio_vad",
-    "kv_tensor_slice",
-    "udf_cogroup_pandas",
-    "agg_survival_km",
-    "llm_jaro_winkler_match",
-    "fn_table_checksum",
-    "agg_basket_rules",
-)
-
-# Round-5 verdict list (VERDICT r4 item 3): deterministic ANN-family
-# substages with full oracles, replacing the three no-oracle end-to-end ANN
-# ops that burned window slots in r4 (driver recorded `err: no_oracle` with
-# no rows fallback — they are now ledger-`no_oracle_by_design` so they never
-# re-enter the window).
-ROUND5_PRIORITY = (
-    "ann_simhash_codes",
-    "ivf_assign",
-    "llm_neardup_shingle",
-    "ivf_search_incremental",
-)
-
-# Round-6 verdict deliverables (VERDICT r5 items 2-3 + the two-stage ANN
-# extension): the persisted-index artifacts, the near-dup dispatcher, and
-# the quantized-rerank search must earn driver rows this round — they
-# registered after the 120-op backlog, so without this float they would
-# wait 3 rounds behind it (4 slots; the other 46 go to the backlog).
-ROUND6_PRIORITY = (
-    "llm_neardup_index_persisted",
-    "ivf_index_persisted",
-    "llm_neardup",
-    "llm_knn_quantized_rerank",
-    # Output-changing round-6 fixes to previously-green ops: their r4
-    # driver rows describe the OLD semantics (token-LSH edges / BIGINT
-    # checksum), so the ledger un-greened them and they re-score here
-    # under the new behavior rather than riding a stale green row.
-    "llm_dedup_clusters",
-    "graph_triangles",
-    "fn_table_checksum",
-    # Vacuity fix: Q22's bare no-orders anti-join was empty at every SF on
-    # this corpus (hash-green rows=0); the recency-cutoff adaptation
-    # changed its output, so it re-scores too.
-    "tpch_q22_global_sales_opportunity",
-    # Round-6 capability proof: Lloyd TRAINING itself under a full oracle
-    # (integer-exact centroid means) — the op the trained persisted index
-    # builds on.
-    "ivf_train_lloyd",
-)
-
-# Round-7 verdict deliverables (VERDICT r6 item 2): the LLM-pipeline
-# composites a real user hits first.  Most already sit inside the r7
-# window by registration order; these three would otherwise wait for r8
-# behind ~29 older backlog ops, so float them in now.
-ROUND7_PRIORITY = (
-    "llm_dedup_incremental",
-    "llm_containment_dup",
-    "llm_embedding_pipeline",
-    # Round-7 flagship deliverable, registered after the backlog: the
-    # fully-oracled two-retriever nDCG/MRR evaluation should earn its
-    # driver row the round it ships (the two span ops enter the window by
-    # registration order already).
-    "llm_retrieval_eval",
-)
-
-# Extension families a real user hits most often — float these ahead of the
-# remaining unscored extensions so they earn driver CORRECTNESS rows first
-# (VERDICT r2 item 3).  Prefix match on the op name.
-PRIORITY_PREFIXES = ("tpch_", "ts_", "win_", "sql_", "stream_join")
-
-
-def _priority(name: str) -> bool:
-    return name.startswith(PRIORITY_PREFIXES)
-
-
-# Round-9 RELEASE: the round-8 backlog cleared (50/50 hash-green in
-# CORRECTNESS_r08), so the formerly-held round-9 ops now score FIRST in the
-# round-9 window (VERDICT r8 "Next round" item 1).  They must precede any
-# op registered later this round — a new registration must never displace
-# one of these out of the 50-slot window.
-ROUND9_HOLDBACK = frozenset(
-    {
-        "llm_epoch_schedule",
-        "llm_packing_efficiency",
-        "llm_sft_spans",
-        "sql_qualify_clause",
-        "llm_token_budget_select",
-        "llm_anneal_mix",
-        "llm_curriculum_phases",
-        "llm_preference_pairs",
-        "llm_best_of_n_stats",
-        "llm_pass_at_k",
-        "llm_training_manifest_persisted",
-        "llm_bitext_mine",
-        "sql_asof_join",
-        "kv_tensor_matmul",
-        "llm_length_grouped_batches",
-        "stream_preference_pairs_static",
-        "llm_grpo_advantages",
-        "mm_audio_chroma",
-        "mm_audio_onset_flux",
-    }
-)
-
-# Round-10 RELEASE: the round-9 window cleared (CORRECTNESS_r09 50/50
-# green), so this formerly-held tranche now enters the round-10 scoring
-# window.  Placement fix (ADVICE r9 item 4): the released tier sits AFTER
-# the §2 contract tier, not before — if a §2 op is ever un-greened it keeps
-# its guaranteed front-of-window slot; the released set follows immediately.
-# (fn_morton_curve and snk_zorder_layout_persisted leaked into the r9 window
-# by registration order and are already ledger-green — harmless here, the
-# green check runs first.)
-ROUND10_HOLDBACK: frozenset[str] = frozenset(
-    {
-        "fn_morton_curve",
-        "snk_zorder_layout_persisted",
-        "snk_stats_manifest_persisted",
-        "src_scan_schema_evolution",
-        "sql_try_arith",
-        "agg_mcnemar_gates",
-        "llm_bradley_terry_step",
-        "llm_length_bias_audit",
-        "graph_hits_iter",
-        "kv_ttl_expiry",
-        "ts_journey_trigrams",
-        "ts_click_attribution",
-        "ts_dwell_time_buckets",
-        "ts_concurrent_sessions",
-        "join_null_safe_eq",
-        "sql_named_window",
-        "agg_kendall_tau_grid",
-        "llm_prompt_compression",
-        "llm_truncation_policies",
-        "agg_lorenz_topshare",
-        "mm_audio_loudness_gate",
-        "ts_daily_spectrum",
-        "agg_sprt_sequential",
-        "snk_partition_evolution",
-        "src_scan_merge_on_read",
-        "llm_keyword_rake",
-        "llm_embed_isotropy",
-        "ts_error_budget_burn",
-        "agg_l_diversity",
-        "agg_mann_kendall_trend",
-        "sql_interval_arith",
-        "llm_groundedness_support",
-        "llm_watermark_greenlist",
-        "kv_tensor_conv1d",
-        "agg_prevalence_adjust",
-    }
-)
-
-# Round-11 RELEASE: the round-10 window cleared (CORRECTNESS_r10 50/50
-# green), so this formerly-held tranche now enters the round-11 scoring
-# window, placed AFTER the §2 contract tier per the ADVICE r9 placement
-# contract.  Includes the two round-10 vacuity-fixed re-queues
-# (llm_vocab_coverage, win_drawdown — stale_before=11 un-greened them).
-ROUND11_HOLDBACK: frozenset[str] = frozenset(
-    {
-        "agg_orphan_audit",
-        "agg_expectations_audit",
-        "stream_expectations_static",
-        "agg_t_closeness",
-        "fn_rle_runs_layout",
-        "ts_traffic_heatmap",
-        "fn_geohash",
-        "fn_feistel_permute",
-        "llm_semantic_cache_hits",
-        "sql_window_exclude",
-        "mm_image_otsu_threshold",
-        "mm_audio_envelope_peaks",
-        "mm_video_frame_sample",
-        "llm_source_influence_loo",
-        "sql_groupby_all",
-        "sql_variant_extract",
-        "graph_clustering_coeff",
-        "src_scan_csv_malformed",
-        "llm_feature_hash_collisions",
-        "agg_wilcoxon_signed",
-        "agg_median_of_means",
-        "llm_mix_power_sweep",
-        "llm_context_length_quota",
-        "sql_regexp_extract_all",
-        "ts_coupon_collector",
-        "llm_prompt_template_render",
-        "agg_srm_check",
-        "agg_partition_skew_audit",
-        "agg_hdr_histogram",
-        "fn_uuid5_mint",
-        "agg_capture_recapture",
-        "ts_fano_dispersion",
-        "fn_bitmap_popcount_join",
-        "sql_offset_fetch",
-        # round-10 vacuity fix: oov_e4 was constant 0 at the old K=50 cut
-        # (vocab > corpus vocabulary); re-scores under the live K=12 cut
-        "llm_vocab_coverage",
-        # round-10 vacuity fix: unsigned balances were monotone so max
-        # drawdown was provably 0; re-scores under signed cash flow
-        "win_drawdown",
-    }
-)
-
-# Round-12 holdback, same mechanics: the round-11 window has 50 - 36
-# released = 14 spare slots; any round-11 registration beyond those 14
-# parks here so it cannot displace the released tier or earlier unscored
-# registrations.  A registry test asserts the 50-slot fit.
-ROUND12_HOLDBACK: frozenset[str] = frozenset(
-    {
-        # wave B (ops/round12b.py)
-        "ts_markov_stationary",
-        "agg_theil_decomposition",
-        "llm_ngram_entropy_rate",
-        "fn_geohash_neighbors",
-        "ts_runs_test",
-        "ts_peak_over_threshold",
-        "agg_nbinom_dispersion",
-        "graph_two_hop_reach",
-        # wave C (ops/round12c.py)
-        "graph_harmonic_centrality_k4",
-        "llm_pack_lower_bounds",
-        "sql_nulls_ordering",
-        "ts_velocity_acceleration",
-        "mm_audio_dc_offset",
-        "llm_softmax_temperature_sweep",
-        "llm_pps_systematic_sample",
-        "kv_tensor_cumsum_axis",
-        # wave D (ops/round12d.py)
-        "llm_cache_capacity_curve",
-        "ts_permutation_entropy",
-        "mm_image_bit_planes",
-        "stream_rate_limit_static",
-        "kv_postings_intersect",
-        "graph_degree_assortativity",
-        "ts_ljung_box",
-        "agg_standardized_mean_diff",
-        # wave E (ops/round12e.py)
-        "llm_policy_kl_budget",
-        "llm_heavy_changers",
-        "sql_pivot_multi_agg",
-        "ts_haar_energy",
-        "agg_beta_binomial_posterior",
-        "llm_simhash_hamming_radius",
-        "ts_pacf_lag2",
-        "llm_heaps_law_curve",
-        # wave F (ops/round12f.py)
-        "agg_fleiss_kappa",
-        "diag_sortedness_audit",
-        "src_scan_json_malformed",
-        "ts_intervention_its",
-        "graph_local_bridges",
-        # wave G (ops/round12g.py)
-        "snk_bloom_index_persisted",
-        "fn_merkle_tree_levels",
-        "agg_hoeffding_sample_bound",
-        "mm_image_erosion_3x3",
-        # wave H (ops/round12h.py)
-        "llm_bigram_perplexity_heldout",
-        "agg_hill_tail_index",
-        "graph_rich_club_coeff",
-        "llm_log_odds_fightin_words",
-        # wave I (ops/round12i.py — capacity top-up from the r13 backlog)
-        "agg_pinball_loss_grid",
-        "graph_katz_bounded",
-        "fn_consistent_hash_ring",
-    }
-)
-
-# Round-13 holdback, same mechanics one generation out: ROUND12_HOLDBACK
-# already fills the round-12 window (48 released + 2 vacuity re-queue
-# slots), so everything built during round 11 beyond that parks here and
-# scores in the round-13 window.  Tier: after ROUND12_HOLDBACK, before
-# already-green (a registry test asserts the round-12 window cannot be
-# displaced).  Spreads validated in DuckDB at sf{0.001,0.01,0.1} before
-# registration — tools/vacuity_r13.md carries the measured evidence.
-ROUND13_HOLDBACK: frozenset[str] = frozenset(
-    {
-        # wave A (ops/round13a.py — time-series statistics)
-        "ts_pettitt_change",
-        "ts_theil_sen",
-        "ts_page_hinkley",
-        "ts_turning_points",
-        "ts_rsi_sma",
-        "ts_bollinger_breach",
-        "ts_kaufman_er",
-        "ts_sample_entropy",
-        # wave B (ops/round13b.py — categorical / experimental statistics)
-        "agg_goodman_kruskal_lambda",
-        "agg_friedman_ranks",
-        "agg_cochran_q",
-        "agg_brier_reliability",
-        "llm_krippendorff_alpha",
-        "agg_simpsons_reversal",
-        "agg_eta_squared",
-        "agg_abc_classification",
-        # wave C (ops/round13c.py — engine diagnostics + function parity)
-        "diag_card_est_error",
-        "diag_join_order_cost",
-        "diag_hist_selectivity",
-        "fn_rendezvous_hash",
-        "fn_business_days",
-        "fn_dod_bits",
-        "fn_width_bucket_parity",
-        "sql_bitagg_parity",
-        # wave D (ops/round13d.py — MT eval, LM smoothing, codecs, graph)
-        "llm_chrf_lite",
-        "llm_bleu_components",
-        "llm_self_bleu",
-        "llm_good_turing_trigram",
-        "fn_intcode_size_census",
-        "graph_jaccard_link_pred",
-        "graph_supplier_copart",
-        "ts_first_passage",
-        # wave E (ops/round13e.py — survival, forecasting, streaming, kv)
-        "ts_hazard_buckets",
-        "ts_backtest_drift",
-        "win_mad_rolling",
-        "stream_breach_alerts_static",
-        "kv_tensor_argmax_axis",
-        "kv_tensor_outer_product",
-        "src_parquet_footer_stats",
-        # wave F (ops/round13f.py — multimodal kernels via real codecs)
-        "mm_image_morph_gradient",
-        "mm_image_median_denoise",
-        "mm_image_hog_octants",
-        "mm_audio_decimate_box4",
-        # wave G (ops/round13g.py — ordered stats, ordinal assoc, bits)
-        "agg_page_trend",
-        "agg_gk_gamma",
-        "agg_kruskal_wallis",
-        "kv_tensor_band_trace",
-        "fn_gray_code_audit",
-    }
-)
-
-# Round-14 holdback — three generations out (ROUND13_HOLDBACK already
-# fills the round-13 window at 48 + 2 spare); built during round 11 from
-# the pre-validated tools/backlog_r14.md designs.
-ROUND14_HOLDBACK: frozenset[str] = frozenset(
-    {
-        # wave A (ops/round14a.py)
-        "agg_mantel_haenszel",
-        "ts_matrix_profile",
-        "agg_c_index",
-        "fn_hamming74_audit",
-        "agg_trimmed_mean",
-        "agg_ece_calibration",
-        "diag_filter_order_cost",
-        "ts_variance_ratio",
-        # wave B (ops/round14b.py)
-        "ts_dtw_daily",
-        "agg_herfindahl",
-        "agg_raking_ipf",
-        "agg_jackknife_variance",
-        "llm_cluster_purity",
-        "llm_adjusted_rand",
-        "mm_image_kmeans_1d",
-        # wave C (ops/round14c.py)
-        "llm_token_burstiness",
-        "win_sharpe_rolling",
-        "ts_recurrence_quant",
-        "fn_verhoeff_check",
-        # wave D (ops/round14d.py)
-        "agg_youden_threshold",
-        "agg_lift_gains",
-        "agg_energy_distance",
-        "agg_cvm_twosample",
-        "ts_poincare_sd",
-        "graph_attr_assortativity",
-        "kv_tensor_horner",
-        # wave E (ops/round14e.py)
-        "agg_oaxaca_blinder",
-        "agg_propensity_strata",
-        "agg_bland_altman",
-        "ts_alert_debounce",
-        "llm_minhash_est_error",
-        # wave F (ops/round14f.py)
-        "fn_soundex_parity",
-        "agg_survival_quantiles",
-        "win_cusum_daily",
-        # wave G (ops/btable_ops.py) — the btable ACID surfaces, registered
-        # in round 13 per VERDICT r12 item 2 (the module shipped in r12
-        # with zero driver rows); they fit the round-14 window's spare
-        # slots (30 unscored + 9 = 39 <= 50), so the no-net-new rule's
-        # intent — backlog fits one window — still holds.
-        "bt_commit_replay_read",
-        "bt_time_travel_read",
-        "bt_restore_roundtrip",
-        "bt_tricky_where_read",
-        "bt_delete_tsrange_state",
-        "bt_stats_skipped_read",
-        "bt_merge_upsert_state",
-        "bt_schema_evolution_read",
-        "bt_optimize_compact_state",
-    }
-)
-
-# Round-15 holdback — wave H, the btable surfaces round 13 built but did
-# not register (VERDICT r13 "Next round" item 3 sanctions <= 11 ops;
-# designs pre-validated in tools/backlog_r15.md).  Parks strictly behind
-# the round-14 window so the final 39-op backlog tranche cannot be
-# displaced.
-ROUND15_HOLDBACK: frozenset[str] = frozenset(
-    {
-        # wave H (ops/btable_cdf.py) — CDF, pruning-state, mergeSchema,
-        # vacuum observability
-        "bt_changes_feed_read",
-        "bt_cdf_replay_state",
-        "bt_merge_schema_read",
-        "bt_in_pruned_read",
-        "bt_null_stats_skipped_read",
-        "bt_vacuum_observability",
-    }
-)
 
 
 def ordered_queries() -> dict[str, QueryFn]:
-    """QUERIES reordered for the driver's bounded scoring window:
-    (1) not-yet-green §2 contract ops, (2) not-yet-green high-traffic
-    extensions (PRIORITY_PREFIXES), (3) other not-yet-green extensions,
-    (4) already-green ops — registration order preserved within each tier,
-    so every SURVEY.md §2 ID gets a driver CORRECTNESS row before any
-    extension re-scores.
-
-    "Green" for tiering purposes = hash-green (ledger key ``green``) OR
-    rows-only-scored (key ``no_oracle_by_design``) OR retired-no-signal
-    (key ``retired_no_signal``): a no-oracle-by-design op can never earn
-    an upgradable row, so a window slot on one is wasted every round
-    forever (fn_sample was doing exactly that).  The two retired keys
-    differ only in honesty about history — no_oracle_by_design ops DID get
-    a weaker driver row once; retired_no_signal ops never got any row
-    (their verification is the hash-green deterministic twins)."""
+    """QUERIES in driver order: ops the ledger does not mark done first,
+    no-oracle ops last within each group, then by name — never by module
+    import order.  Done = hash-green (``green``) or no-oracle
+    (``no_oracle_by_design``, ``retired_no_signal``): a no-oracle op can
+    never earn an upgradable driver row."""
     try:
         ledger = json.loads(GREEN_LEDGER.read_text())
-        green = (
-            set(ledger["green"])
-            | set(ledger.get("no_oracle_by_design", ledger.get("rows_only_scored", [])))
-            | set(ledger.get("retired_no_signal", []))
-        )
-    except (OSError, ValueError, KeyError):
-        green = set()
-    try:
-        sec2 = set(json.loads(SEC2_CONTRACT.read_text())["sec2"])
-    except (OSError, ValueError, KeyError) as exc:
-        # A malformed contract file would silently widen tier 0 to every op
-        # and scramble the window order — warn loudly (ADVICE r2).
-        import warnings
-
-        warnings.warn(
-            f"sec2_contract.json unreadable ({exc!r}); treating ALL queries "
-            "as contract ops — fix tools/sec2_contract.json",
-            stacklevel=2,
-        )
-        sec2 = set(QUERIES)
-
-    verdict_rank = {n: i for i, n in enumerate(VERDICT_PRIORITY)}
-    r4_rank = {n: i for i, n in enumerate(ROUND4_PRIORITY)}
-    r5_rank = {n: i for i, n in enumerate(ROUND5_PRIORITY)}
-    r6_rank = {n: i for i, n in enumerate(ROUND6_PRIORITY)}
-    r7_rank = {n: i for i, n in enumerate(ROUND7_PRIORITY)}
-
-    def tier(n: str) -> int:
-        if n in green:
-            return 14
-        if n in ROUND15_HOLDBACK:
-            # Wave H: behind the final round-14 backlog tranche, ahead only
-            # of greens.
-            return 13
-        if n in ROUND14_HOLDBACK:
-            # Three generations out: behind ROUND13, ahead only of greens.
-            return 12
-        if n in ROUND13_HOLDBACK:
-            # Parks one generation behind ROUND12_HOLDBACK so the round-12
-            # window (48 + 2 re-queue slots) can never be displaced.
-            return 11
-        if n in ROUND12_HOLDBACK:
-            return 10
-        if n in sec2:
-            return 0
-        if n in ROUND10_HOLDBACK:
-            # Released round 10 — AFTER §2 (ADVICE r9 item 4): an
-            # un-greened contract op keeps its guaranteed front slot, the
-            # released tranche follows, and nothing registered later this
-            # round can displace either.
-            return 1
-        if n in ROUND11_HOLDBACK:
-            # Released round 11, same placement contract.
-            return 2
-        if n in verdict_rank:
-            return 3
-        if n in r4_rank:
-            return 4
-        if n in r5_rank:
-            return 5
-        if n in r6_rank:
-            return 6
-        if n in r7_rank:
-            return 7
-        return 8 if _priority(n) else 9
-
-    out: dict[str, QueryFn] = {}
-    for t in range(15):
-        names = [n for n in QUERIES if tier(n) == t]
-        if t == 3:
-            names.sort(key=verdict_rank.__getitem__)
-        elif t == 4:
-            names.sort(key=r4_rank.__getitem__)
-        elif t == 5:
-            names.sort(key=r5_rank.__getitem__)
-        elif t == 6:
-            names.sort(key=r6_rank.__getitem__)
-        elif t == 7:
-            names.sort(key=r7_rank.__getitem__)
-        out.update({n: QUERIES[n] for n in names})
-    return out
+    except (OSError, ValueError):
+        ledger = {}
+    keys = ("green", "no_oracle_by_design", "retired_no_signal")
+    done = {n for key in keys for n in ledger.get(key, [])}
+    order = sorted(QUERIES, key=lambda n: (n in done, n not in ORACLES, n))
+    return {n: QUERIES[n] for n in order}
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

@@ -30,6 +30,9 @@ def test_engine_entry_points_agree(spark, sf_dir):
     # deterministic: the same selection on a second call
     assert samp.count() == eng.sample(pct=10).count()
 
+    # the default strategy is the registered op
+    assert eng.neardup().columns == eng.op("llm_neardup").columns
+
     plan = eng.explain(eng.table("lineitem").select("l_orderkey"))
     assert "ReadSchema" in plan
 
@@ -37,34 +40,34 @@ def test_engine_entry_points_agree(spark, sf_dir):
 def test_engine_facade_analytics_surface(spark, sf_dir):
     eng = Engine.connect(sf_dir, spark=spark)
     for name in (
-        "stratified_sample",
-        "vocab_coverage",
-        "shard_order",
-        "ohlc",
-        "skew_stats",
-        "heavy_hitters",
-        "range_bounds",
-        "zorder_keys",
-        "source_drift",
-        "mix_weights",
-        "anomaly_mad",
-        "cov_exact",
-        "sessionize",
-        "importance_sample",
-        "pipeline",
-        "vwap",
-        "gaps",
-        "pattern_match",
-        "neardup",
-        "knn_quantized",
-        "segment_dedup",
-        "prefix_clusters",
-        "entropy_filter",
-        "perplexity_buckets",
-        "minhash_calibration",
-        "curation_pipeline",
+        "llm_stratified_sample",
+        "llm_vocab_coverage",
+        "llm_shard_order",
+        "ts_ohlc",
+        "diag_skew_stats",
+        "diag_heavy_hitters",
+        "diag_range_bounds",
+        "sort_zorder",
+        "llm_source_drift",
+        "llm_mix_weights",
+        "ts_anomaly_mad",
+        "agg_cov_exact",
+        "ts_sessionize",
+        "llm_importance_sample",
+        "llm_pipeline_e2e",
+        "ts_vwap",
+        "ts_gap_detect",
+        "win_pattern_match",
+        "llm_neardup",
+        "llm_knn_quantized_rerank",
+        "llm_segment_dedup",
+        "llm_prefix_dup",
+        "llm_entropy_filter",
+        "llm_perplexity_bucket",
+        "llm_minhash_calibration",
+        "llm_curation_pipeline",
     ):
-        df = getattr(eng, name)()
+        df = eng.op(name)
         assert df.columns, name
         assert df.limit(1).count() >= 0, name
 

@@ -1,11 +1,10 @@
-"""Registry / scoring-window contract tests (VERDICT r2 items 3 & 8,
+"""Registry / driver-order contract tests (VERDICT r2 items 3 & 8,
 ADVICE r2): the §2 contract file must stay consistent with the registered
-ops, the green ledger must only name real ops, and — the driver-window
-guard — the top-50 of ordered_queries() (what the driver will actually
-score next round) must all be registered with runnable callables and, where
-claimed, oracle SQL.  The value-level check for every op (window included)
-is tests/test_correctness.py; this file pins the *ordering* machinery so a
-broken op can never again sit silently at the front of the rotation queue.
+ops, the green ledger must only name real ops and stay folded from every
+CORRECTNESS_r*.json on disk, and ordered_queries() (what the driver scores
+first) must be the one sort key — not-yet-done ops first, no-oracle ops
+last, then by name — independent of module import order.  The value-level
+check for every op is tests/test_correctness.py.
 """
 
 from __future__ import annotations
@@ -13,22 +12,33 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-import pytest
-
 from biggie_spark.registry import (
     GREEN_LEDGER,
     ORACLES,
     QUERIES,
-    SEC2_CONTRACT,
     load_all_ops,
     ordered_queries,
 )
 
 load_all_ops()
 
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def _done() -> set[str]:
+    """Ledger union that counts as done: hash-green OR rows-only-scored (a
+    no-oracle-by-design op whose rows-only row can never upgrade) OR
+    retired-no-signal (no-oracle op with no row — same zero-signal math)."""
+    ledger = json.loads(GREEN_LEDGER.read_text())
+    return (
+        set(ledger["green"])
+        | set(ledger.get("no_oracle_by_design", []))
+        | set(ledger.get("retired_no_signal", []))
+    )
+
 
 def test_sec2_contract_ids_all_registered():
-    sec2 = json.loads(SEC2_CONTRACT.read_text())["sec2"]
+    sec2 = json.loads((ROOT / "tools" / "sec2_contract.json").read_text())["sec2"]
     assert len(sec2) == len(set(sec2)), "duplicate ids in sec2 contract"
     missing = [n for n in sec2 if n not in QUERIES]
     assert not missing, f"contract ids with no registered op: {missing}"
@@ -50,26 +60,44 @@ def test_ordered_queries_is_permutation():
 
 
 def test_window_prioritizes_nongreen_contract_ops():
+    """Every not-done op precedes every done op."""
+    done = _done()
+    flags = [n in done for n in ordered_queries()]
+    assert flags == sorted(flags), "a done op precedes a not-done op"
+
+
+def test_order_is_the_sort_key():
+    done = _done()
+    expect = sorted(QUERIES, key=lambda n: (n in done, n not in ORACLES, n))
+    assert list(ordered_queries()) == expect
+
+
+def test_order_ignores_registration_order(monkeypatch):
+    """Regrouping op modules must not move the order: the same ops
+    registered in reverse order give the same sequence."""
+    import biggie_spark.registry as reg
+
+    before = list(ordered_queries())
+    monkeypatch.setattr(reg, "QUERIES", dict(reversed(list(QUERIES.items()))))
+    assert list(reg.ordered_queries()) == before
+
+
+def test_window_has_no_no_oracle_ops():
+    """A no-oracle op can never earn an upgradable driver row, so none may
+    take one of the first 50 slots the driver scores."""
+    window = list(ordered_queries())[:50]
+    bad = [n for n in window if n not in ORACLES]
+    assert not bad, f"no-oracle ops in the top 50: {bad}"
+
+
+def test_ledger_is_fresh():
+    """The on-disk ledger is exactly the fold of every CORRECTNESS_r*.json,
+    so a round's green rows can never again go unrecorded — run
+    tools/refresh_ledger.py when this fails."""
+    from tools.refresh_ledger import fold
+
     ledger = json.loads(GREEN_LEDGER.read_text())
-    # "done" for window purposes = hash-green OR rows-only-scored (a
-    # no-oracle-by-design op whose rows-only row can never upgrade) OR
-    # retired-no-signal (no-oracle op with no row — same zero-signal math)
-    green = (
-        set(ledger["green"])
-        | set(ledger.get("no_oracle_by_design", []))
-        | set(ledger.get("retired_no_signal", []))
-    )
-    sec2 = set(json.loads(SEC2_CONTRACT.read_text())["sec2"])
-    oq = list(ordered_queries())
-    window = oq[:50]
-    # every non-done contract op must be inside the scoring window
-    pending_contract = [n for n in sec2 if n not in green]
-    outside = [n for n in pending_contract if n not in window]
-    assert not outside, f"non-green §2 ops outside the window: {outside}"
-    # no done op may occupy a window slot while any non-done op waits
-    n_nongreen = sum(1 for n in oq if n not in green)
-    greens_in_window = [n for n in window if n in green]
-    assert not greens_in_window or n_nongreen < 50
+    assert fold(ledger) == ledger
 
 
 def test_no_oracle_by_design_ops_really_have_no_oracle():
@@ -122,18 +150,6 @@ def test_window_ops_have_oracle_or_documented_weak():
     assert not bad, f"window ops missing oracle SQL: {bad}"
 
 
-def test_malformed_contract_warns(tmp_path, monkeypatch):
-    """ADVICE r2: a bad edit to sec2_contract.json must be loud, not a
-    silent every-op-is-contract fallback."""
-    import biggie_spark.registry as reg
-
-    bad = tmp_path / "sec2_contract.json"
-    bad.write_text("{not json")
-    monkeypatch.setattr(reg, "SEC2_CONTRACT", Path(bad))
-    with pytest.warns(UserWarning, match="sec2_contract"):
-        reg.ordered_queries()
-
-
 def test_ledgered_rows_only_ops_leave_the_window():
     """VERDICT r4 item 3: the driver records `err: no_oracle` with NO rows
     fallback for no-oracle ops, so once an op is ledger-`no_oracle_by_design`
@@ -147,108 +163,6 @@ def test_ledgered_rows_only_ops_leave_the_window():
     window = list(ordered_queries())[:50]
     stuck = [n for n in window if n in rows_only]
     assert not stuck, f"ledgered rows-only ops burning window slots: {stuck}"
-
-
-def test_round11_released_ops_follow_sec2_in_the_window():
-    """Round 11: the round-10 window cleared (CORRECTNESS_r10 50/50 green),
-    so the formerly-held ROUND11 tranche is RELEASED.  Placement contract
-    (ADVICE r9 item 4): any un-greened §2 op precedes the released tiers;
-    the released tiers precede every other unscored op; overflow new ops
-    park in ROUND12_HOLDBACK, which stays behind every other unscored op."""
-    from biggie_spark.registry import (
-        ROUND10_HOLDBACK,
-        ROUND11_HOLDBACK,
-        ROUND12_HOLDBACK,
-    )
-
-    ledger = json.loads(GREEN_LEDGER.read_text())
-    green = (
-        set(ledger["green"])
-        | set(ledger.get("no_oracle_by_design", []))
-        | set(ledger.get("retired_no_signal", []))
-    )
-    sec2 = set(json.loads(SEC2_CONTRACT.read_text())["sec2"])
-    oq = list(ordered_queries())
-    unscored = [n for n in oq if n not in green]
-    released_tiers = ROUND10_HOLDBACK | ROUND11_HOLDBACK
-    released = [n for n in unscored if n in released_tiers and n not in sec2]
-    others = [
-        n for n in unscored if n not in released_tiers and n not in sec2
-    ]
-    others = [n for n in others if n not in ROUND12_HOLDBACK]
-    # un-greened §2 ops (if any ever appear) must precede the released tiers
-    pending_sec2 = [n for n in unscored if n in sec2]
-    if pending_sec2 and released:
-        assert max(oq.index(n) for n in pending_sec2) < min(
-            oq.index(n) for n in released
-        ), "a released op precedes an un-greened §2 contract op"
-    if released and others:
-        last_released = max(oq.index(n) for n in released)
-        first_other = min(oq.index(n) for n in others)
-        assert last_released < first_other, (
-            "an unscored extension precedes a released op: "
-            f"{[n for n in others if oq.index(n) < last_released]}"
-        )
-    from biggie_spark.registry import (
-        ROUND13_HOLDBACK,
-        ROUND14_HOLDBACK,
-        ROUND15_HOLDBACK,
-    )
-
-    held12 = [n for n in unscored if n in ROUND12_HOLDBACK]
-    held13 = [n for n in unscored if n in ROUND13_HOLDBACK]
-    held14 = [n for n in unscored if n in ROUND14_HOLDBACK]
-    held15 = [n for n in unscored if n in ROUND15_HOLDBACK]
-    held_any = (
-        ROUND12_HOLDBACK
-        | ROUND13_HOLDBACK
-        | ROUND14_HOLDBACK
-        | ROUND15_HOLDBACK
-    )
-    rest = [n for n in unscored if n not in held_any]
-    if held12 and rest:
-        assert min(oq.index(n) for n in held12) > max(oq.index(n) for n in rest)
-    # Each holdback generation parks strictly behind the previous one: a
-    # later tranche must never displace an earlier window.
-    if held12 and held13:
-        assert min(oq.index(n) for n in held13) > max(
-            oq.index(n) for n in held12
-        ), "a ROUND13_HOLDBACK op precedes a ROUND12_HOLDBACK op"
-    if held13 and held14:
-        assert min(oq.index(n) for n in held14) > max(
-            oq.index(n) for n in held13
-        ), "a ROUND14_HOLDBACK op precedes a ROUND13_HOLDBACK op"
-    if held14 and held15:
-        assert min(oq.index(n) for n in held15) > max(
-            oq.index(n) for n in held14
-        ), "a ROUND15_HOLDBACK op precedes a ROUND14_HOLDBACK op"
-    for a, b in (
-        (held12, held13),
-        (held13, held14),
-        (held12, held14),
-        (held12, held15),
-        (held13, held15),
-        (held14, held15),
-    ):
-        assert not (set(a) & set(b)), "op in two holdbacks"
-    # Wave H stays within the sanctioned cap (VERDICT r13 item 3/4): round
-    # 14 ships <= 11 net-new registered ops, all in ROUND15_HOLDBACK.
-    assert len(ROUND15_HOLDBACK) <= 11, "wave H exceeds the sanctioned cap"
-    # The window must never overflow past the driver's 50 slots with
-    # unscored ops — that's exactly the displacement bug holdbacks prevent.
-    n_pending = (
-        len(unscored) - len(held12) - len(held13) - len(held14) - len(held15)
-    )
-    assert n_pending <= 50, (
-        f"{n_pending} unscored ops for a 50-slot window; move the newest "
-        "registrations into a holdback"
-    )
-    missing = [
-        n
-        for n in released_tiers | held_any
-        if n not in QUERIES
-    ]
-    assert not missing, f"holdback names unregistered ops: {missing}"
 
 
 def test_coverage_ledger_matches_live_registry():
@@ -281,113 +195,3 @@ def test_survey_sec8_totals_match_registry():
     m = re.search(r"(\d+) operators total \(incl\..*?(\d+) full-oracle", text, re.S)
     assert m, "SURVEY.md §8 totals sentence missing"
     assert (int(m.group(1)), int(m.group(2))) == (len(QUERIES), len(ORACLES))
-
-
-def test_vacuity_audit_covers_every_holdback_op():
-    """tools/vacuity_r9.md went stale twice in round 8 (claimed blanket
-    holdback coverage while missing newly added ops).  Pin it: every
-    ROUND9_HOLDBACK name must appear in the audit doc, so adding an op
-    without auditing it fails CI instead of shipping an unearned
-    'no vacuous green' conclusion."""
-    from pathlib import Path
-
-    from biggie_spark.registry import ROUND9_HOLDBACK, ROUND10_HOLDBACK
-
-    tools = Path(__file__).resolve().parent.parent / "tools"
-    text9 = (tools / "vacuity_r9.md").read_text()
-    missing = [n for n in sorted(ROUND9_HOLDBACK) if n not in text9]
-    assert not missing, f"holdback ops missing from vacuity_r9.md: {missing}"
-    text10 = (tools / "vacuity_r10.md").read_text()
-    missing = [n for n in sorted(ROUND10_HOLDBACK) if n not in text10]
-    assert not missing, f"holdback ops missing from vacuity_r10.md: {missing}"
-    from biggie_spark.registry import ROUND11_HOLDBACK
-
-    text11 = (tools / "vacuity_r11.md").read_text()
-    missing = [n for n in sorted(ROUND11_HOLDBACK) if n not in text11]
-    assert not missing, f"holdback ops missing from vacuity_r11.md: {missing}"
-    from biggie_spark.registry import ROUND12_HOLDBACK
-
-    text12 = (tools / "vacuity_r12.md").read_text()
-    missing = [n for n in sorted(ROUND12_HOLDBACK) if n not in text12]
-    assert not missing, f"holdback ops missing from vacuity_r12.md: {missing}"
-    from biggie_spark.registry import ROUND13_HOLDBACK, ROUND14_HOLDBACK
-
-    text13 = (tools / "vacuity_r13.md").read_text()
-    missing = [n for n in sorted(ROUND13_HOLDBACK) if n not in text13]
-    assert not missing, f"holdback ops missing from vacuity_r13.md: {missing}"
-    text14 = (tools / "vacuity_r14.md").read_text()
-    missing = [n for n in sorted(ROUND14_HOLDBACK) if n not in text14]
-    assert not missing, f"holdback ops missing from vacuity_r14.md: {missing}"
-    from biggie_spark.registry import ROUND15_HOLDBACK
-
-    text15 = (tools / "vacuity_r15.md").read_text()
-    missing = [n for n in sorted(ROUND15_HOLDBACK) if n not in text15]
-    assert not missing, f"holdback ops missing from vacuity_r15.md: {missing}"
-
-
-def test_future_windows_release_in_generation_order():
-    """Forward displacement invariant, LEDGER-RELATIVE (the original
-    hardcoded the r12 ledger state and went stale the moment the r12 rows
-    were folded in): whatever the ledger says now, the current window must
-    be the oldest unscored holdback generation (plus next-generation
-    spares filling the tail), and simulating it green must surface exactly
-    the next generation.  Catches a tier-ordering regression BEFORE it
-    wastes a real driver window."""
-    from biggie_spark.registry import (
-        ROUND12_HOLDBACK,
-        ROUND13_HOLDBACK,
-        ROUND14_HOLDBACK,
-        ROUND15_HOLDBACK,
-    )
-
-    ledger = json.loads(GREEN_LEDGER.read_text())
-    done = (
-        set(ledger["green"])
-        | set(ledger.get("no_oracle_by_design", []))
-        | set(ledger.get("retired_no_signal", []))
-    )
-    oq = list(ordered_queries())
-    generations = [
-        ROUND12_HOLDBACK,
-        ROUND13_HOLDBACK,
-        ROUND14_HOLDBACK,
-        ROUND15_HOLDBACK,
-    ]
-
-    def window_after(greened: set[str]) -> list[str]:
-        pending = [n for n in oq if n not in done | greened]
-        return pending[:50]
-
-    greened: set[str] = set()
-    pending_gens = [g for g in generations if (g - done)]
-    for i, gen in enumerate(pending_gens):
-        w = set(window_after(greened))
-        if not w:
-            break
-        remaining_gen = gen - done - greened
-        # the window must contain the WHOLE oldest pending generation
-        # (or, if the generation overflows 50, nothing but it)
-        if len(remaining_gen) <= 50:
-            assert w >= remaining_gen, (
-                f"generation {i}: tranche not fully inside its window: "
-                f"{sorted(remaining_gen - w)[:5]}"
-            )
-            spill = w - remaining_gen
-            later = set().union(*pending_gens[i + 1 :]) if i + 1 < len(
-                pending_gens
-            ) else set()
-            assert spill <= later, (
-                f"generation {i}: window spares are not next-generation "
-                f"ops: {sorted(spill - later)[:5]}"
-            )
-        else:
-            assert w <= remaining_gen, (
-                f"generation {i}: a later op displaced an overflowing "
-                f"tranche: {sorted(w - remaining_gen)[:5]}"
-            )
-        greened |= w
-    # after every generation greens, nothing unscored may remain
-    assert not window_after(greened), (
-        "unscored ops outside all holdback generations survived the "
-        f"simulation: {window_after(greened)[:5]}"
-    )

@@ -1,14 +1,14 @@
 """Refresh tools/driver_green.json from every CORRECTNESS_r*.json on disk.
 
-Run this FIRST THING each round (the round-3 verdict's #1 lesson: a stale
-ledger makes ordered_queries() waste its bounded scoring window re-scoring
-already-green ops while never-scored extensions stay unscored forever).
+Run it whenever a CORRECTNESS_r*.json lands: ordered_queries() puts ops
+the ledger does not list first, and tests/test_registry.py
+``test_ledger_is_fresh`` fails while the ledger lags the rows on disk.
 
 * ``green``             — ops with a hash-green row in ANY round.
 * ``no_oracle_by_design``  — no-oracle-by-design ops (sketches, RNG sampling,
   ANN) that DID receive a driver row (``err: no_oracle`` but
   ``spark_rows > 0`` recorded): the weaker rows-only signal exists and can
-  never upgrade, so re-scoring wastes a window slot every round.
+  never upgrade, so re-scoring it yields nothing.
 * ``retired_no_signal`` — no-oracle-by-design ops with NO driver row of
   any kind (round-11 verdict "What's wrong" #2: the old ledger filed
   these under ``no_oracle_by_design``, claiming a scoring that never
@@ -18,7 +18,7 @@ already-green ops while never-scored extensions stay unscored forever).
   ``agg_hll_sketch_union`` → ``agg_hll_portable``.
 
 An op with an oracle whose row failed (rows/schema/hash mismatch) stays
-OUT of both lists so it re-enters the window after a fix.
+OUT of both lists so it moves to the front of the order until it greens.
 
 Usage: python tools/refresh_ledger.py        # rewrite + print summary
        python tools/refresh_ledger.py --dry  # print what would change
@@ -26,20 +26,21 @@ Usage: python tools/refresh_ledger.py        # rewrite + print summary
 
 from __future__ import annotations
 
-import glob
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+LEDGER = ROOT / "tools" / "driver_green.json"
+sys.path.insert(0, str(ROOT))
 
-from biggie_spark.registry import ORACLES, QUERIES, load_all_ops
-
-LEDGER = "/root/repo/tools/driver_green.json"
+from biggie_spark.registry import ORACLES, QUERIES, load_all_ops  # noqa: E402
 
 
-def main() -> None:
+def fold(old: dict) -> dict:
+    """The ledger implied by every CORRECTNESS_r*.json under ROOT, keeping
+    ``old``'s notes and ``stale_before``."""
     load_all_ops()
-    old = json.load(open(LEDGER))
     # Rows scored BEFORE an op's semantics changed must never re-green it:
     # stale_before[op] = first round whose CORRECTNESS rows describe the
     # CURRENT output (round-6 reworks: shingle graph edges, DECIMAL
@@ -49,12 +50,12 @@ def main() -> None:
     stale_before: dict[str, int] = old.get("stale_before", {})
     green: set[str] = set()
     rows_only: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        rows = json.load(open(path))
+    for path in sorted(ROOT.glob("CORRECTNESS_r*.json")):
+        rnd = int(path.stem.rsplit("_r", 1)[1])
+        rows = json.loads(path.read_text())
         for name, r in rows.items():
             if name not in QUERIES:
-                continue  # renamed/removed op; let the window re-resolve it
+                continue  # renamed/removed op; let the order re-resolve it
             if rnd < stale_before.get(name, 0):
                 continue  # row predates the op's current semantics
             if r.get("hash_match"):
@@ -65,14 +66,13 @@ def main() -> None:
                 if (r.get("spark_rows") or 0) > 0:
                     rows_only.add(name)
     # Round-4 lesson (VERDICT r4 item 3): for an op with no oracle_sql()
-    # entry a window slot yields zero UPGRADABLE signal, this round and
-    # every round — so every registered no-oracle op is retired from the
-    # window.  Round-11 verdict fix: ops that never even got the weaker
-    # rows-only row go under a separate, honest key instead of being
-    # filed as "scored".  Their verification lives in the internal gates
-    # (recall floors in tests/test_ann.py etc.) and in hash-green
-    # deterministic twins (agg_quantiles, agg_hll_portable,
-    # fn_sample_hash).
+    # entry a driver row yields zero UPGRADABLE signal, this round and
+    # every round — so every registered no-oracle op is done.  Round-11
+    # verdict fix: ops that never even got the weaker rows-only row go
+    # under a separate, honest key instead of being filed as "scored".
+    # Their verification lives in the internal gates (recall floors in
+    # tests/test_ann.py etc.) and in hash-green deterministic twins
+    # (agg_quantiles, agg_hll_portable, fn_sample_hash).
     rows_only -= green
     retired = {n for n in QUERIES if n not in ORACLES} - green - rows_only
 
@@ -85,12 +85,19 @@ def main() -> None:
     if stale_before:
         new["_stale"] = old.get("_stale", "")
         new["stale_before"] = stale_before
+    return new
+
+
+def main() -> None:
+    old = json.loads(LEDGER.read_text())
+    new = fold(old)
+    green, rows_only = set(new["green"]), set(new["no_oracle_by_design"])
     added_g = green - set(old.get("green", []))
     added_r = rows_only - set(old.get("no_oracle_by_design", []))
     print(
         f"green: {len(old.get('green', []))} -> {len(green)} (+{len(added_g)}); "
         f"rows_only: {len(old.get('no_oracle_by_design', []))} -> {len(rows_only)} "
-        f"(+{len(added_r)}); retired_no_signal: {len(retired)}"
+        f"(+{len(added_r)}); retired_no_signal: {len(new['retired_no_signal'])}"
     )
     if added_g:
         print("new green:", ", ".join(sorted(added_g)))
@@ -98,9 +105,7 @@ def main() -> None:
         print("new rows-only-scored:", ", ".join(sorted(added_r)))
     if "--dry" in sys.argv:
         return
-    with open(LEDGER, "w") as f:
-        json.dump(new, f, indent=1)
-        f.write("\n")
+    LEDGER.write_text(json.dumps(new, indent=1) + "\n")
     print(f"wrote {LEDGER}")
 
 

@@ -311,7 +311,7 @@ ROUND12 = {
     "q_ra_index": "graph_resource_alloc_index",
     "q_quadtree": "mm_image_quadtree_occupancy",
     "q_silence_trim": "mm_audio_silence_trim",
-    # wave B (ROUND12_HOLDBACK)
+    # wave B (ops/round12b.py)
     "q_markov_pi": "ts_markov_stationary",
     "q_theil": "agg_theil_decomposition",
     "q_entropy_rate": "llm_ngram_entropy_rate",
@@ -320,7 +320,7 @@ ROUND12 = {
     "q_pot": "ts_peak_over_threshold",
     "q_nbinom": "agg_nbinom_dispersion",
     "q_two_hop": "graph_two_hop_reach",
-    # wave C (ROUND12_HOLDBACK)
+    # wave C (ops/round12c.py)
     "q_harmonic": "graph_harmonic_centrality_k4",
     "q_pack_bounds": "llm_pack_lower_bounds",
     "q_nulls_order": "sql_nulls_ordering",
@@ -329,7 +329,7 @@ ROUND12 = {
     "q_temp_sweep": "llm_softmax_temperature_sweep",
     "q_pps": "llm_pps_systematic_sample",
     "q_tensor_scan": "kv_tensor_cumsum_axis",
-    # wave D (ROUND12_HOLDBACK)
+    # wave D (ops/round12d.py)
     "q_cache_curve": "llm_cache_capacity_curve",
     "q_perm_entropy": "ts_permutation_entropy",
     "q_bit_planes": "mm_image_bit_planes",
@@ -338,7 +338,7 @@ ROUND12 = {
     "q_assortativity": "graph_degree_assortativity",
     "q_ljung_box": "ts_ljung_box",
     "q_smd": "agg_standardized_mean_diff",
-    # wave E (ROUND12_HOLDBACK)
+    # wave E (ops/round12e.py)
     "q_kl_budget": "llm_policy_kl_budget",
     "q_heavy_changers": "llm_heavy_changers",
     "q_pivot_multi": "sql_pivot_multi_agg",
@@ -347,23 +347,23 @@ ROUND12 = {
     "q_hamming_radius": "llm_simhash_hamming_radius",
     "q_pacf": "ts_pacf_lag2",
     "q_heaps": "llm_heaps_law_curve",
-    # wave F (ROUND12_HOLDBACK)
+    # wave F (ops/round12f.py)
     "q_fleiss": "agg_fleiss_kappa",
     "q_sortedness": "diag_sortedness_audit",
     "q_json_malformed": "src_scan_json_malformed",
     "q_its": "ts_intervention_its",
     "q_local_bridges": "graph_local_bridges",
-    # wave G (ROUND12_HOLDBACK)
+    # wave G (ops/round12g.py)
     "q_bloom_index": "snk_bloom_index_persisted",
     "q_merkle": "fn_merkle_tree_levels",
     "q_hoeffding": "agg_hoeffding_sample_bound",
     "q_erosion": "mm_image_erosion_3x3",
-    # wave H (ROUND12_HOLDBACK)
+    # wave H (ops/round12h.py)
     "q_heldout_ppl": "llm_bigram_perplexity_heldout",
     "q_hill": "agg_hill_tail_index",
     "q_rich_club": "graph_rich_club_coeff",
     "q_fightin": "llm_log_odds_fightin_words",
-    # wave I (ROUND12_HOLDBACK)
+    # wave I (ops/round12i.py)
     "q_pinball": "agg_pinball_loss_grid",
     "q_katz": "graph_katz_bounded",
     "q_hash_ring": "fn_consistent_hash_ring",
@@ -412,8 +412,8 @@ ROUND10 = {
     "q_prevalence": "agg_prevalence_adjust",
 }
 
-# Round-7 window composites (the LLM-pipeline entries the r6 verdict floated
-# into this round's scoring window) + the new overlapping-span dedup op —
+# Round-7 LLM-pipeline composites (VERDICT r6 item 2) + the
+# overlapping-span dedup op —
 # measured over the natural sf0.01 → sf0.1 step like the other content-keyed
 # families (text/window hashes key on CONTENT; key-shifted replication would
 # fabricate quadratic true answers).

@@ -333,26 +333,27 @@ _COLLECT_ALLOWLIST = {
     # to drive the pruned data read — bounded by the shard count (<= 8).
     "ops/round12g.py": 1,
     # round-12 btable (audited in SCALE.md "btable metadata plane"): all
-    # four sites are metadata-plane, bounded by FILE counts, never rows —
+    # sites are metadata-plane, bounded by FILE counts, never rows —
     # (1) per-file min/max stats collected into the commit log (one row
     # per file written in THIS commit; the add actions must reach the
     # driver to be logged, same shape as Delta's per-file stats),
     # (2) merge's source key-range min/max (1 row),
-    # (3) merge's hit-file list and (4) delete's hit-file list (one row
-    # per candidate data file, after stats-range pruning),
-    # (5, round-14 deletion vectors) merge-on-read delete's coalesced
+    # (3) the hit probe merge and copy-on-write delete share: hit-row
+    # counts per file (one row per hit data file, after stats-range
+    # pruning),
+    # (4, round-14 deletion vectors) merge-on-read delete's coalesced
     # run list: positions are compressed to [start,end) runs JVM-side
     # BEFORE collect, so the driver sees O(#runs) — metadata scale,
     # never O(#deleted rows) — and files fragmenting past
     # max_dv_ranges_per_file fall back to copy-on-write in the same
     # commit (SCALE.md "Round-14: deletion vectors"),
-    # (6, round-14 bloom indexes) _write_blooms' per-file word
+    # (5, round-14 bloom indexes) _write_blooms' per-file word
     # aggregation: bit positions are OR-folded into 64-bit words
     # JVM-side, so the driver sees at most files x ceil(bits/64) rows —
     # the bloom filters' own metadata size, written straight into the
     # commit-dir sidecars (SCALE.md "Round-14: bloom-filter file
     # skipping").
-    "tablefmt.py": 6,
+    "tablefmt.py": 5,
     # round-13 btable scored surfaces (SCALE.md "Round-13: tablefmt
     # hardening"): every site collects a BOUNDED AGGREGATE result
     # (<= ~60 rows — per-region / per-version / per-predicate counts) so

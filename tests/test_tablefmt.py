@@ -5,6 +5,8 @@ copy-on-write file-level surgery, and stats-based data skipping."""
 from __future__ import annotations
 
 import os
+import random
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +16,7 @@ from biggie_spark.tablefmt import (
     CommitConflict,
     SchemaMismatch,
     _maybe_matches,
+    _read_log,
 )
 
 
@@ -1635,3 +1638,205 @@ def test_optimize_zorder_timestamp_axis(spark, tmp_path):
     w = "ts >= '2024-03-01 10:00:00' AND ts < '2024-03-01 20:00:00'"
     assert t.scan_file_count(w) < t.scan_file_count()
     assert t.read(spark, where=w).count() == 80
+
+
+# ------------------------------------------- one evaluation per DML write
+
+
+def test_delete_keeps_null_predicate_rows_in_both_modes(spark, tmp_path):
+    """A row whose delete predicate is NULL is not deleted: copy-on-write
+    keeps it exactly as merge-on-read does, and the log's row count
+    agrees with the data."""
+    rows = [(1, "a"), (2, None), (3, "c"), (4, "x")]
+    for mode in ("copy_on_write", "merge_on_read"):
+        t = BTable.create(
+            spark,
+            str(tmp_path / mode),
+            spark.createDataFrame(rows, "k bigint, s string").coalesce(1),
+        )
+        t.delete(spark, "s = 'x'", mode=mode)
+        got = sorted((r.k, r.s) for r in t.read(spark).collect())
+        assert got == [(1, "a"), (2, None), (3, "c")], mode
+        assert t.count_rows() == 3, mode
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` ran, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"btable-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "btable job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dml_job_budget_on_clustered_bloom_table(spark, tmp_path):
+    """Each DML evaluates its inputs once: no count job for sizes the log
+    and the hit probe know, no second candidate scan, no re-run of the
+    caller's frame.  AQE off, as the benchmark runs (AQE submits every
+    shuffle stage as a job of its own)."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        schema = "k bigint, v bigint, s string"
+        t = BTable.create(
+            spark,
+            str(tmp_path / "t"),
+            spark.range(50_000).select(
+                F.col("id").alias("k"),
+                (F.col("id") % 97).alias("v"),
+                F.lit("b").alias("s"),
+            ),
+            cluster_by=["k"],
+            cluster_file_rows=25_000,
+            bloom_cols=["k"],
+        )
+        upsert = spark.createDataFrame(
+            [(1000 + 10 * i, -1, "m") for i in range(190)]
+            + [(-1 - i, -2, "n") for i in range(10)],
+            schema,
+        )
+        assert _jobs(spark, lambda: t.merge(spark, upsert, on="k")) <= 6
+        more = spark.createDataFrame(
+            [(50_000 + i, 0, "a") for i in range(500)], schema
+        )
+        assert _jobs(spark, lambda: t.append(spark, more)) <= 3
+        assert _jobs(spark, lambda: t.delete(spark, "k = 7")) <= 3
+        assert t.count_rows() == 50_509 == t.read(spark).count()
+        assert t.read(spark, where="k = 1000").first().v == -1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _check_last_commit(t, file_rows):
+    """The newest commit's adds carry their files' exact row counts, and
+    a clustered write landed ceil(rows / file_rows) files."""
+    import pyarrow.parquet as pq
+
+    adds = _read_log(t.path)[-1].get("add", [])
+    for a in adds:
+        path = os.path.join(t.path, a["path"])
+        assert a["rows"] == pq.ParquetFile(path).metadata.num_rows, a
+    written = sum(a["rows"] for a in adds)
+    assert len(adds) == -(-written // file_rows), (written, len(adds))
+
+
+@pytest.mark.parametrize("row_tracking", [False, True])
+def test_dml_adds_carry_exact_rows_and_file_counts(
+    spark, tmp_path, row_tracking
+):
+    """The sizes a write takes from the log and the hit probe are the
+    sizes it writes: after a seeded mix of merges (hitting DV'd files and
+    re-inserting DV-deleted keys), appends and deletes, every add's
+    ``rows`` is its parquet row count and every clustered commit landed
+    ceil(rows / cluster_file_rows) files."""
+    rng = random.Random(20)
+    schema = "k bigint, v bigint, s string"
+    file_rows = 40
+    model = {k: (k, k * 3, f"s{k % 7}") for k in range(100)}
+    t = BTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(list(model.values()), schema),
+        cluster_by=["k"],
+        cluster_file_rows=file_rows,
+        row_tracking=row_tracking,
+    )
+    _check_last_commit(t, file_rows)
+    nxt = 100
+    ops = ["dv", "merge", "append", "delete", "dv", "delete", "merge",
+           "append", "merge", "delete"]
+    for step, op in enumerate(ops):
+        if op == "dv":
+            ks = rng.sample(sorted(model), 3)
+            t.delete(
+                spark, f"k IN ({', '.join(map(str, ks))})",
+                mode="merge_on_read",
+            )
+            assert t.snapshot().dvs
+            for k in ks:
+                del model[k]
+        elif op == "merge":
+            # hits in DV'd files, DV-deleted keys and fresh keys
+            ks = rng.sample(range(nxt + 10), 15)
+            src = [(k, -step, f"m{step}") for k in ks]
+            t.merge(spark, spark.createDataFrame(src, schema), on="k")
+            model.update((r[0], r) for r in src)
+            nxt = max(nxt, max(ks) + 1)
+        elif op == "append":
+            src = [(nxt + i, step, "a") for i in range(rng.randint(5, 60))]
+            t.append(spark, spark.createDataFrame(src, schema))
+            model.update((r[0], r) for r in src)
+            nxt += len(src)
+        else:
+            lo = rng.randrange(nxt)
+            hi = lo + rng.randint(1, 12)
+            t.delete(spark, f"k >= {lo} AND k < {hi}")
+            model = {k: r for k, r in model.items() if not lo <= k < hi}
+        _check_last_commit(t, file_rows)
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == sorted(model.values())
+    assert t.count_rows() == len(model)
+    if row_tracking:
+        ids = [r._row_id for r in t.read(spark, with_row_ids=True).collect()]
+        assert len(set(ids)) == len(ids) == len(model)
+
+
+def _sort_rows(rows):
+    return sorted(rows, key=lambda r: (r[0] is None, r[0] or 0, r[1], r[2]))
+
+
+@pytest.mark.parametrize("row_tracking", [False, True])
+@pytest.mark.parametrize("when_not_matched", ["insert", "ignore"])
+@pytest.mark.parametrize("when_matched", ["update", "delete"])
+def test_merge_mode_matrix_matches_model(
+    spark, tmp_path, when_matched, when_not_matched, row_tracking
+):
+    """Every when_matched x when_not_matched combination against a
+    Python model, with null keys on both sides (a null key never
+    matches: a null-key target row stays, a null-key source row is an
+    insert)."""
+    schema = "k bigint, v bigint, s string"
+    target = [(k, k * 10, f"t{k}") for k in range(60)] + [(None, -1, "tn")]
+    source = [
+        (3, 1, "u3"), (25, 2, "u25"), (26, 3, "u26"),  # two files hit
+        (100, 4, "n100"), (-5, 5, "n-5"),  # no target match
+        (None, 6, "sn1"), (None, 7, "sn2"),  # null keys
+    ]
+    t = BTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(target[:20], schema).coalesce(1),
+        row_tracking=row_tracking,
+    )
+    for lo, hi in ((20, 40), (40, 61)):
+        t.append(spark, spark.createDataFrame(target[lo:hi], schema).coalesce(1))
+    hit_files = set(t.snapshot(1).files)  # keys 0..39: 3, 25, 26 match
+    (missed,) = set(t.snapshot().files) - hit_files
+    t.merge(
+        spark,
+        spark.createDataFrame(source, schema),
+        on="k",
+        when_matched=when_matched,
+        when_not_matched=when_not_matched,
+    )
+    by_key = {r[0]: r for r in source if r[0] is not None}
+    want = [
+        by_key.get(r[0], r) if when_matched == "update" else r
+        for r in target
+        if when_matched == "update" or r[0] not in by_key
+    ]
+    if when_not_matched == "insert":
+        keys = {r[0] for r in target}
+        want += [r for r in source if r[0] is None or r[0] not in keys]
+    got = [tuple(r) for r in t.read(spark).collect()]
+    assert _sort_rows(got) == _sort_rows(want)
+    assert t.count_rows() == len(want)
+    files = set(t.snapshot().files)
+    assert missed in files and not hit_files & files, "rewrote a missed file"
+    if row_tracking:
+        ids = [r._row_id for r in t.read(spark, with_row_ids=True).collect()]
+        assert len(set(ids)) == len(ids)

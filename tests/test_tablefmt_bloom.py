@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from biggie_spark.tablefmt import (
     BTable,
     _bloom_contains,
-    _bloom_pos_expr,
+    _bloom_pos_sql,
     _bloom_pos_py,
     _read_log,
 )
@@ -72,7 +72,7 @@ def test_jvm_and_python_positions_agree(spark):
     for seed in (0, 3, 6):
         got = [
             r[0]
-            for r in df.select(_bloom_pos_expr("s", seed, 4096)).collect()
+            for r in df.select(F.expr(_bloom_pos_sql("s", seed, 4096))).collect()
         ]
         want = [_bloom_pos_py(v, seed, 4096) for v in vals]
         assert got == want, seed
@@ -82,7 +82,7 @@ def test_integral_positions_agree(spark):
     df = spark.createDataFrame(
         [(0,), (7,), (-42,), (2**62,)], "v long"
     )
-    got = [r[0] for r in df.select(_bloom_pos_expr("v", 1, 1024)).collect()]
+    got = [r[0] for r in df.select(F.expr(_bloom_pos_sql("v", 1, 1024))).collect()]
     want = [_bloom_pos_py(str(v), 1, 1024) for v in (0, 7, -42, 2**62)]
     assert got == want
 

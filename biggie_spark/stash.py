@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biggie_spark.io import save_parquet
@@ -48,11 +48,20 @@ class Stash:
 
     def mget(self, key_values: list) -> DataFrame:
         if len(key_values) > 1000:
-            keys_df = self.spark.createDataFrame(
-                [Row(**{self.key: k}) for k in key_values]
-            )
+            keys_df = self._keys_frame(key_values)
             return self.df.join(F.broadcast(keys_df), self.key, "left_semi")
         return self.df.filter(F.col(self.key).isin(key_values))
+
+    def _keys_frame(self, key_values: list) -> DataFrame:
+        """Probe keys as an Arrow-fed LocalRelation of the stash's key
+        type.  ``createDataFrame`` over Python rows is a Python RDD, so
+        every action over the join would start Python workers."""
+        import pyarrow as pa
+
+        key_type = self.df.schema[self.key].dataType
+        return self.spark.createDataFrame(
+            pa.table({self.key: list(key_values)})
+        ).select(F.col(self.key).cast(key_type).alias(self.key))
 
     def keys(self) -> DataFrame:
         return self.df.select(self.key).distinct()
@@ -143,7 +152,7 @@ class Stash:
     def remove(self, key_values: list) -> "Stash":
         if not key_values:  # removing nothing is a no-op, not a crash
             return self
-        keys_df = self.spark.createDataFrame([Row(**{self.key: k}) for k in key_values])
+        keys_df = self._keys_frame(key_values)
         survived = self.df.join(F.broadcast(keys_df), self.key, "left_anti")
         return Stash(self.spark, survived, self.key, self.path)
 

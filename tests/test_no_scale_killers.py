@@ -334,10 +334,14 @@ _COLLECT_ALLOWLIST = {
     "ops/round12g.py": 1,
     # round-12 btable (audited in SCALE.md "btable metadata plane"): all
     # sites are metadata-plane, bounded by FILE counts, never rows —
-    # (1) per-file min/max stats collected into the commit log (one row
-    # per file written in THIS commit; the add actions must reach the
-    # driver to be logged, same shape as Delta's per-file stats),
-    # (2) merge's source key-range min/max (1 row),
+    # (1) per-file min/max stats and fresh bloom words collected into
+    # the commit log (one row per file written in THIS commit; the add
+    # actions must reach the driver to be logged, same shape as Delta's
+    # per-file stats; the bloom words are k x ceil(bits/32768) 4 KiB
+    # bitmaps per indexed column — the filters' own size, written
+    # straight into the commit-dir sidecars, SCALE.md "Round-14:
+    # bloom-filter file skipping"),
+    # (2) merge's source key-range min/max and its bloom words (1 row),
     # (3) the hit probe merge and copy-on-write delete share: hit-row
     # counts per file (one row per hit data file, after stats-range
     # pruning),
@@ -346,14 +350,10 @@ _COLLECT_ALLOWLIST = {
     # BEFORE collect, so the driver sees O(#runs) — metadata scale,
     # never O(#deleted rows) — and files fragmenting past
     # max_dv_ranges_per_file fall back to copy-on-write in the same
-    # commit (SCALE.md "Round-14: deletion vectors"),
-    # (5, round-14 bloom indexes) _write_blooms' per-file word
-    # aggregation: bit positions are OR-folded into 64-bit words
-    # JVM-side, so the driver sees at most files x ceil(bits/64) rows —
-    # the bloom filters' own metadata size, written straight into the
-    # commit-dir sidecars (SCALE.md "Round-14: bloom-filter file
-    # skipping").
-    "tablefmt.py": 5,
+    # commit (SCALE.md "Round-14: deletion vectors").
+    # The separate bloom word aggregation is gone: fresh words ride the
+    # write's observed metrics or site (1), rewrites inherit sidecars.
+    "tablefmt.py": 4,
     # round-13 btable scored surfaces (SCALE.md "Round-13: tablefmt
     # hardening"): every site collects a BOUNDED AGGREGATE result
     # (<= ~60 rows — per-region / per-version / per-predicate counts) so
@@ -393,3 +393,78 @@ def test_collect_allowlist():
         "If the new site is O(1)-bounded and justified, audit it in SCALE.md "
         "and extend this allowlist; otherwise remove the collect."
     )
+
+
+# --- driver-built frames ------------------------------------------------------
+# spark.createDataFrame over Python rows is a Python RDD: every action over
+# a frame joined to it starts Python workers (a 1-row probe anti-joined to
+# the DV ranges took 0.32-0.43 s that way, 0.12-0.14 s through Arrow).
+# The btable and Stash metadata frames are built in one audited helper per
+# module, each from a pyarrow.Table, which Spark plans as a LocalRelation.
+_CREATE_DATAFRAME_ALLOWLIST = {
+    # _meta_frame: DV range lists and per-file row-id bases
+    "tablefmt.py": 1,
+    # Stash._keys_frame: mget (> 1000 keys) and remove probe keys
+    "stash.py": 1,
+}
+
+
+def test_create_dataframe_allowlist():
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "biggie_spark"
+    found = {}
+    for name in _CREATE_DATAFRAME_ALLOWLIST:
+        code = [
+            line.split("#", 1)[0]
+            for line in (pkg / name).read_text().splitlines()
+        ]
+        found[name] = sum(
+            len(re.findall(r"createDataFrame\(", c)) for c in code
+        )
+    assert found == _CREATE_DATAFRAME_ALLOWLIST, (
+        f"createDataFrame( sites changed: {found} != "
+        f"{_CREATE_DATAFRAME_ALLOWLIST}. Build metadata frames through the "
+        "module's Arrow-fed helper, not from Python rows."
+    )
+
+
+def test_metadata_frames_plan_without_python_rdd(spark, tmp_path):
+    """The optimized plans of DV'd btable reads (plain, with row ids, the
+    change feed) and of a 1001-key Stash.mget hold no LogicalRDD (a
+    Python-fed frame)."""
+    from pyspark.sql import functions as F
+
+    from biggie_spark.stash import Stash
+    from biggie_spark.tablefmt import BTable
+
+    t = BTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.range(100).select(F.col("id").alias("k")).coalesce(1),
+        row_tracking=True,
+    )
+    t.delete(spark, "k % 10 = 3", mode="merge_on_read")
+    assert t.snapshot().dvs
+    stash = Stash(
+        spark,
+        spark.range(3000).select(
+            F.col("id").alias("doc_id"), F.col("id").cast("string").alias("v")
+        ),
+        "doc_id",
+    )
+    frames = {
+        "read": t.read(spark),
+        "read_with_row_ids": t.read(spark, with_row_ids=True),
+        "changes": t.changes(spark, 0),
+        "changes_with_row_ids": t.changes(spark, 0, with_row_ids=True),
+        "mget": stash.mget(list(range(1001))),
+        "remove": stash.remove([1, 2, 3]).df,
+    }
+    for what, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, f"{what}: {plan}"
+    assert frames["read"].count() == 90
+    assert frames["mget"].count() == 1001
+

@@ -1676,8 +1676,10 @@ def _jobs(spark, fn) -> int:
 def test_dml_job_budget_on_clustered_bloom_table(spark, tmp_path):
     """Each DML evaluates its inputs once: no count job for sizes the log
     and the hit probe know, no second candidate scan, no re-run of the
-    caller's frame.  AQE off, as the benchmark runs (AQE submits every
-    shuffle stage as a job of its own)."""
+    caller's frame, and no bloom job — a rewrite inherits its sidecars
+    and an append observes its bits in the write.  AQE off, as the
+    benchmark runs (AQE submits every shuffle stage as a job of its
+    own)."""
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -1699,14 +1701,45 @@ def test_dml_job_budget_on_clustered_bloom_table(spark, tmp_path):
             + [(-1 - i, -2, "n") for i in range(10)],
             schema,
         )
-        assert _jobs(spark, lambda: t.merge(spark, upsert, on="k")) <= 6
+        assert _jobs(spark, lambda: t.merge(spark, upsert, on="k")) <= 5
         more = spark.createDataFrame(
             [(50_000 + i, 0, "a") for i in range(500)], schema
         )
-        assert _jobs(spark, lambda: t.append(spark, more)) <= 3
-        assert _jobs(spark, lambda: t.delete(spark, "k = 7")) <= 3
+        assert _jobs(spark, lambda: t.append(spark, more)) <= 2
+        assert _jobs(spark, lambda: t.delete(spark, "k = 7")) <= 2
         assert t.count_rows() == 50_509 == t.read(spark).count()
         assert t.read(spark, where="k = 1000").first().v == -1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_create_job_budget_on_two_file_clustered_bloom_table(spark, tmp_path):
+    """A clustered create that lands two files runs its count, the range
+    sampling, the write and ONE per-file aggregate that builds the stats
+    and the bloom words together (AQE off)."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        box = []
+        n = _jobs(
+            spark,
+            lambda: box.append(
+                BTable.create(
+                    spark,
+                    str(tmp_path / "t"),
+                    spark.range(50_000).select(
+                        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
+                    ),
+                    cluster_by=["k"],
+                    cluster_file_rows=25_000,
+                    bloom_cols=["k"],
+                )
+            ),
+        )
+        assert n <= 4, n
+        (t,) = box
+        assert len(t.snapshot().files) == 2
+        assert t.scan_file_count("k = 49999") == 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 

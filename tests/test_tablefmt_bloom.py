@@ -242,13 +242,21 @@ def test_dv_delete_keeps_bloom_superset_safe(spark, tmp_path):
     assert t.read(spark, where=f"doc == '{_md5(42)}'").count() == 0
 
 
-def test_cow_delete_rewrite_rebuilds_blooms(spark, tmp_path):
+def test_cow_delete_rewrite_inherits_blooms(spark, tmp_path):
+    """A copy-on-write rewrite inherits the filter it replaces (no
+    survivor is hashed again): the deleted key's bits go stale, which
+    costs a scan but never a row, and OPTIMIZE drops them."""
     t = _grid(spark, tmp_path)
     t.delete(spark, "k == 42")
     assert t.read(spark).count() == 99
     snap = t.snapshot()
     assert all("bloom" in a for a in snap.files.values())
     t2 = BTable(t.path)  # fresh handle: no warm caches
+    assert t2.scan_file_count(f"doc == '{_md5(42)}'") == 1
+    assert t2.read(spark, where=f"doc == '{_md5(42)}'").count() == 0
+    assert t2.scan_file_count(f"doc == '{_md5(43)}'") == 1
+    assert t2.scan_file_count(f"doc == '{ABSENT}'") == 0
+    t2.optimize(spark)
     assert t2.scan_file_count(f"doc == '{_md5(42)}'") == 0
     assert t2.scan_file_count(f"doc == '{_md5(43)}'") == 1
 
@@ -313,3 +321,152 @@ def test_bloom_contains_roundtrip():
         words[w * 8 : (w + 1) * 8] = (cur | (1 << b)).to_bytes(8, "little")
     assert _bloom_contains(bytes(words), 256, 5, "x")
     assert not _bloom_contains(bytes(words), 256, 5, "y")
+
+
+# ---------------------------------------------- inherited vs fresh sidecars
+
+
+def _scratch_words(values, bits: int, k: int) -> bytes:
+    """A from-scratch filter over ``values`` (canonical strings)."""
+    w = 0
+    for v in values:
+        for seed in range(k):
+            w |= 1 << _bloom_pos_py(v, seed, bits)
+    return w.to_bytes(8 * -(-bits // 64), "little")
+
+
+def _file_values(t, add, phys: str) -> list[str]:
+    """Non-null values of a data file's physical column, as the
+    canonical strings the filter hashes (integers print plainly)."""
+    import pyarrow.parquet as pq
+
+    col = pq.read_table(os.path.join(t.path, add["path"]), columns=[phys])
+    return [str(v) for v in col.column(0).to_pylist() if v is not None]
+
+
+def _sidecar(t, add) -> dict:
+    import base64
+    import json
+
+    with open(os.path.join(t.path, add["bloom"])) as f:
+        sc = json.load(f)
+    return {c: base64.b64decode(w) for c, w in sc["cols"].items()}
+
+
+def _assert_live_keys_probe(t, bits, k):
+    """Every value of every live file probes positive in its sidecar."""
+    for add in t.snapshot().files.values():
+        for phys, words in _sidecar(t, add).items():
+            for v in _file_values(t, add, phys):
+                assert _bloom_contains(words, bits, k, v), (add["path"], v)
+
+
+@pytest.mark.parametrize(
+    "bits,k,row_tracking",
+    [(64, 1, False), (1000, 7, True), (32768, 1, True), (65600, 7, False)],
+)
+def test_sidecars_superset_after_seeded_dml_mix(
+    spark, tmp_path, bits, k, row_tracking
+):
+    """A seeded mix of 1- and 2-file merge rewrites, copy-on-write and
+    DV-fallback deletes, appends and a renamed bloom column on a mapped
+    table: every sidecar covers its file's keys; appends and OPTIMIZE
+    build exact filters (byte-equal to a from-scratch build), and
+    OPTIMIZE drops the stale bits the inherited filters carried."""
+    import random
+
+    rng = random.Random(bits + k)
+    schema = ["k bigint, doc string, v bigint"]
+    model = {i: (i, f"d{i * 7919 % 1009}", i % 5) for i in range(0, 240, 2)}
+    t = BTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(sorted(model.values()), schema[0]),
+        cluster_by=["k"],
+        cluster_file_rows=50,
+        row_tracking=row_tracking,
+        bloom_cols=["k", "doc"],
+        bloom_bits=bits,
+        bloom_k=k,
+    )
+    assert len(t.snapshot().files) == 3
+    fresh = []  # add actions whose filters must be exact
+
+    def src(keys, tag):
+        rows = [(x, None if x % 3 == 0 else f"{tag}{x}", -x) for x in keys]
+        return rows, spark.createDataFrame(rows, schema[0])
+
+    def files_holding(keys):
+        snap = t.snapshot()
+        return {
+            rel
+            for rel, a in snap.files.items()
+            if any(a["stats"]["k"][0] <= x <= a["stats"]["k"][1] for x in keys)
+        }
+
+    # 1-file merge: updates and inserts inside the first file's range
+    rows, df = src(rng.sample(range(0, 40), 12), "m1_")
+    assert len(files_holding([r[0] for r in rows])) == 1
+    t.merge(spark, df, on="k")
+    model.update((r[0], r) for r in rows)
+    # 2-file merge: keys on both sides of a file boundary
+    rows, df = src(rng.sample(range(70, 130), 20), "m2_")
+    assert len(files_holding([r[0] for r in rows])) == 2
+    t.merge(spark, df, on="k")
+    model.update((r[0], r) for r in rows)
+    # append: a fresh single-file write
+    rows, df = src(range(300, 330), "a_")
+    t.append(spark, df)
+    fresh += _read_log(t.path)[-1]["add"]
+    model.update((r[0], r) for r in rows)
+    # copy-on-write delete
+    gone = rng.sample(sorted(model), 4)
+    t.delete(spark, f"k IN ({', '.join(map(str, gone))})")
+    for x in gone:
+        del model[x]
+    # DV-fallback rewrite: every other key fragments past one range
+    lo = sorted(model)[10]
+    doomed = [x for x in model if lo <= x < lo + 24 and x % 4 == 0]
+    t.delete(
+        spark,
+        f"k >= {lo} AND k < {lo + 24} AND k % 4 = 0",
+        mode="merge_on_read",
+        max_dv_ranges_per_file=1,
+    )
+    assert "remove" in _read_log(t.path)[-1], "DV fallback did not rewrite"
+    for x in doomed:
+        del model[x]
+    # rename the indexed string column (the table becomes mapped); a
+    # merge after it hashes the source under the new logical name
+    t.rename_column("doc", "fp")
+    schema[0] = "k bigint, fp string, v bigint"
+    rows, df = src(rng.sample(range(150, 260), 15), "r_")
+    t.merge(spark, df, on="k")
+    model.update((r[0], r) for r in rows)
+    rows, df = src(range(400, 420), "a2_")
+    t.append(spark, df)
+    fresh += _read_log(t.path)[-1]["add"]
+    model.update((r[0], r) for r in rows)
+
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == sorted(model.values())
+    _assert_live_keys_probe(t, bits, k)
+    stale = any(
+        _sidecar(t, a)[p] != _scratch_words(_file_values(t, a, p), bits, k)
+        for a in t.snapshot().files.values()
+        for p in ("k", "doc")
+    )
+    t.optimize(spark)
+    optimized = _read_log(t.path)[-1]["add"]
+    assert len(optimized) > 1  # the per-file stats+bloom pass
+    fresh += optimized
+    for add in fresh:
+        for phys, words in _sidecar(t, add).items():
+            want = _scratch_words(_file_values(t, add, phys), bits, k)
+            assert words == want, (add["path"], phys)
+    _assert_live_keys_probe(t, bits, k)
+    if bits >= 1000:
+        assert stale, "the mix left no inherited stale bits to drop"
+    for x in doomed[:3]:
+        assert t.read(spark, where=f"k = {x}").count() == 0
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == got
